@@ -13,13 +13,17 @@ Three tiers here:
 
 - pure-Python ``decode_*`` / ``encode_*`` — the semantic ground truth,
   unit- and hypothesis-tested;
-- ``decode_col`` / ``encode_col`` — the production tier: the same dual
-  rule built from pure codegen'd expressions (conv/hex arithmetic,
-  reflect() for IEEE bits) — NO Python boundary, so the connector
-  hot path stays inside whole-stage codegen at any scale;
+- ``decode_sql`` / ``encode_sql`` — the production tier: one SQL-text
+  template per Hive type, built from codegen'd built-ins (conv/hex
+  arithmetic, reflect() for IEEE bits) — NO Python boundary, so the
+  connector hot path stays inside whole-stage codegen at any scale.
+  ``source.cells_to_table`` and ``sink.to_cells`` render them over column
+  names into one ``selectExpr``; ``decode_col`` / ``encode_col`` apply
+  the same template to any Column through a SQL temporary function, which
+  Catalyst inlines to the same executed plan;
 - ``decode_col_arrow`` / ``encode_col_arrow`` — Arrow-batched pandas_udf
-  wrappers over the Python decoders, equivalence-tested against the
-  expression tier (tests/test_codecs.py).
+  wrappers over the Python decoders, kept as the reference the SQL tier
+  is equivalence-tested against (tests/test_codecs.py).
 
 Encodings follow LazyCassandraUtils.getCassandraType
 (serde2/lazy/LazyCassandraUtils.java:17-41): boolean→1 byte, int→4 BE,
@@ -389,18 +393,25 @@ def decode_col_arrow(col: Column, hive_type: str) -> Column:
     return _decode(col)
 
 
-# ----------------------------------------------- expression (JVM) codecs ---
-# The connector hot path must stay inside whole-stage codegen (no Python
-# workers); these build the dual-decode rule from built-in expressions.
-# hex() on BinaryType is byte-wise (length 2·bytes, leading zeros kept), so
-# fixed-width reinterpretation is exact; IEEE bit patterns go through
-# reflect('java.lang.{Double,Float}', ...), still JVM-side.
+# ------------------------------------------------ SQL-text (JVM) codecs ---
+# The production tier: one SQL-text template per Hive type, the only
+# expression implementation of the dual-decode rule. ``source.cells_to_table``
+# and ``sink.to_cells`` render the templates over column names into ONE
+# ``selectExpr`` (one parse instead of dozens of Py4J Column compositions);
+# ``decode_col``/``encode_col`` render the template over a column reference,
+# or bind any other Column operand through a lazily registered SQL
+# temporary function whose body is the same template, which Catalyst
+# inlines into the identical executed plan. Everything stays
+# inside whole-stage codegen: hex() on BinaryType is byte-wise (length
+# 2·bytes, leading zeros kept), so fixed-width reinterpretation is exact;
+# IEEE bit patterns go through reflect('java.lang.{Double,Float}', ...),
+# still JVM-side.
 #
-# Text-fallback grammar note: the expression path implements the
-# *reference's* Java parse semantics (Integer.parseInt-style: optional
-# sign + digits; standard decimal/scientific floats) — Python's int()/
-# float() are slightly looser (underscore separators, "inf"); the
-# equivalence tests pin the shared grammar.
+# Text-fallback grammar note: the templates implement the *reference's*
+# Java parse semantics (Integer.parseInt-style: optional sign + digits;
+# standard decimal/scientific floats) — Python's int()/float() are slightly
+# looser (underscore separators, "inf"); the equivalence tests pin the
+# shared grammar.
 
 # `\x00-\x20` (not `\s`): Java String.trim() strips every char <= U+0020,
 # which the Python tier mirrors via _java_trim — see that comment
@@ -415,113 +426,231 @@ _B64_TEXT = (
     r"([A-Za-z0-9+/]{4}|[A-Za-z0-9+/]{3}=|[A-Za-z0-9+/]{2}==)$"
 )
 _B64_STRICT_RE = re.compile(_B64_TEXT.encode())
+_B64_SNIFF = r"^[A-Za-z0-9+/= \t\r\n]*$"
+_B64_WS_TEXT = r"[ \t\r\n]"
+_JAVA_TRIM_EDGES = r"^[\x00-\x20]+|[\x00-\x20]+$"
 
 
-def _ascii(col: Column) -> Column:
+def sql_str(s: str) -> str:
+    """A Spark SQL string literal holding exactly ``s`` (the parser
+    unescapes backslashes, so regex escapes are doubled)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """A backquoted Spark SQL identifier for a column named ``name``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_binary(data: bytes | str) -> str:
+    """A Spark SQL binary literal of ``data`` (str → its UTF-8 bytes)."""
+    raw = data.encode("utf-8") if isinstance(data, str) else bytes(data)
+    return f"X'{raw.hex()}'"
+
+
+def _ascii(v: str) -> str:
     # undecodable high bytes become U+FFFD, which no numeric regex matches —
     # same net null as Python's ascii-decode raise
-    return F.decode(col, "US-ASCII")
+    return f"decode({v}, 'US-ASCII')"
 
 
-def _signed64(col: Column) -> Column:
-    """Reinterpret an 8-byte binary column as a signed big-endian long:
-    two conv()'d 32-bit halves recombined (conv alone is unsigned)."""
-    hx = F.hex(col)
-    hi = F.conv(F.substring(hx, 1, 8), 16, 10).cast("long")
-    lo = F.conv(F.substring(hx, 9, 8), 16, 10).cast("long")
-    shi = F.when(hi >= F.lit(1 << 31), hi - F.lit(1 << 32)).otherwise(hi)
-    return shi * F.lit(1 << 32) + lo
+def _signed64(v: str) -> str:
+    """An 8-byte binary as a signed big-endian long: conv() to a negative
+    base reads the 64-bit pattern as two's complement."""
+    return f"CAST(conv(hex({v}), 16, -10) AS BIGINT)"
 
 
-def _signed32(col: Column) -> Column:
-    v = F.conv(F.hex(col), 16, 10).cast("long")
-    return F.when(v >= F.lit(1 << 31), v - F.lit(1 << 32)).otherwise(v)
+def _signed32(v: str) -> str:
+    """A 4-byte binary as a signed big-endian int (as BIGINT): the
+    unsigned value shifted up and arithmetically back down."""
+    return f"shiftright(shiftleft(CAST(conv(hex({v}), 16, 10) AS BIGINT), 32), 32)"
 
 
-def _text_int(col: Column, spark_type: str) -> Column:
-    m = F.regexp_extract(_ascii(col), _INT_TEXT, 1)
-    return F.when(m != "", m.cast(spark_type))
+def _text_num(v: str, pattern: str, sql_type: str) -> str:
+    m = f"regexp_extract({_ascii(v)}, {sql_str(pattern)}, 1)"
+    return f"CAST(nullif({m}, '') AS {sql_type})"
 
 
-def _text_float(col: Column, spark_type: str) -> Column:
-    m = F.regexp_extract(_ascii(col), _FLOAT_TEXT, 1)
-    return F.when(m != "", m.cast(spark_type))
+def _reflect(cls: str, method: str, arg: str, sql_type: str) -> str:
+    return f"CAST(reflect('java.lang.{cls}', '{method}', {arg}) AS {sql_type})"
 
 
-def _reflect_double(bits: Column) -> Column:
-    return F.reflect(
-        F.lit("java.lang.Double"), F.lit("longBitsToDouble"), bits
-    ).cast("double")
+def _decode_boolean(v: str) -> str:
+    # trim() strips spaces only; Java-trim all of \x00-\x20
+    low = f"lower(regexp_replace({_ascii(v)}, {sql_str(_JAVA_TRIM_EDGES)}, ''))"
+    return (
+        f"CASE WHEN {v} IS NULL THEN CAST(NULL AS BOOLEAN)"
+        f" WHEN length({v}) = 1 THEN conv(substring(hex({v}), 1, 2), 16, 10) != '0'"
+        f" WHEN {low} = 'true' THEN true WHEN {low} = 'false' THEN false END"
+    )
 
 
-def _reflect_float(bits: Column) -> Column:
-    return F.reflect(
-        F.lit("java.lang.Float"), F.lit("intBitsToFloat"), bits.cast("int")
-    ).cast("float")
+def _decode_timestamp(v: str) -> str:
+    ms = _signed64(v)
+    m = f"regexp_extract({_ascii(v)}, {sql_str(_TS_TEXT)}, 1)"
+    return (
+        f"CASE WHEN length({v}) = 8 THEN CASE WHEN {ms} BETWEEN {_TS_MILLIS_MIN}L"
+        f" AND {_TS_MILLIS_MAX}L THEN timestamp_millis({ms}) END"
+        f" ELSE CAST(nullif({m}, '') AS TIMESTAMP_LTZ) END"
+    )
+
+
+def _decode_binary(v: str) -> str:
+    # whitespace-tolerant sniff matching decode_binary / commons-codec
+    # isArrayByteBase64: all bytes alphabet-or-whitespace → strip the
+    # whitespace, decode complete quads only (partial tail dropped)
+    s = _ascii(v)
+    cleaned = f"regexp_replace({s}, {sql_str(_B64_WS_TEXT)}, '')"
+    head = f"substr({cleaned}, 1, length({cleaned}) - pmod(length({cleaned}), 4))"
+    return (
+        f"CASE WHEN length({v}) > 0 AND {s} RLIKE {sql_str(_B64_SNIFF)}"
+        f" THEN CASE WHEN length({head}) = 0 THEN X''"
+        f" WHEN {head} RLIKE {sql_str(_B64_TEXT)} THEN unbase64({head}) ELSE {v} END"
+        f" ELSE {v} END"
+    )
+
+
+_DECODE_SQL = {
+    "boolean": _decode_boolean,
+    # text-only in the reference (Hive LazyByte/LazyShort,
+    # CassandraLazyFactory.java:56-59)
+    "tinyint": lambda v: _text_num(v, _INT_TEXT, "TINYINT"),
+    "smallint": lambda v: _text_num(v, _INT_TEXT, "SMALLINT"),
+    "int": lambda v: (
+        f"CASE WHEN length({v}) = 4 THEN CAST({_signed32(v)} AS INT)"
+        f" ELSE {_text_num(v, _INT_TEXT, 'INT')} END"
+    ),
+    "bigint": lambda v: (
+        f"CASE WHEN length({v}) = 8 THEN {_signed64(v)}"
+        f" ELSE {_text_num(v, _INT_TEXT, 'BIGINT')} END"
+    ),
+    "float": lambda v: (
+        f"CASE WHEN length({v}) = 4 THEN"
+        f" {_reflect('Float', 'intBitsToFloat', f'CAST({_signed32(v)} AS INT)', 'FLOAT')}"
+        f" ELSE {_text_num(v, _FLOAT_TEXT, 'FLOAT')} END"
+    ),
+    "double": lambda v: (
+        f"CASE WHEN length({v}) = 8 THEN"
+        f" {_reflect('Double', 'longBitsToDouble', _signed64(v), 'DOUBLE')}"
+        f" ELSE {_text_num(v, _FLOAT_TEXT, 'DOUBLE')} END"
+    ),
+    # decode() replaces invalid UTF-8 rather than nulling the row; the
+    # reference's LazyString behaves the same way (Hive Text replacement)
+    "string": lambda v: f"decode({v}, 'UTF-8')",
+    "timestamp": _decode_timestamp,
+    "binary": _decode_binary,
+}
+
+
+def _fixed_bytes(value_as_long: str, n_bytes: int) -> str:
+    """Big-endian fixed-width bytes of a (sign-extended) long value."""
+    return f"unhex(substring(lpad(hex({value_as_long}), 16, '0'), {17 - 2 * n_bytes}, {2 * n_bytes}))"
+
+
+def _encode_ieee(v: str, cls: str, method: str, sql_type: str, n_bytes: int) -> str:
+    bits = _reflect(cls, method, f"CAST({v} AS {sql_type})", "BIGINT")
+    # reflect() cannot unbox a NULL argument — guard so NULL encodes to
+    # a NULL cell instead of a task failure
+    return f"CASE WHEN {v} IS NOT NULL THEN {_fixed_bytes(bits, n_bytes)} END"
+
+
+# widths per LazyCassandraUtils.getCassandraType
+# (serde2/lazy/LazyCassandraUtils.java:17-41)
+_ENCODE_SQL = {
+    "boolean": lambda v: (
+        f"CASE WHEN {v} IS NULL THEN CAST(NULL AS BINARY) WHEN {v} THEN X'01' ELSE X'00' END"
+    ),
+    "tinyint": lambda v: f"encode(CAST({v} AS STRING), 'US-ASCII')",
+    "smallint": lambda v: f"encode(CAST({v} AS STRING), 'US-ASCII')",
+    "int": lambda v: _fixed_bytes(f"CAST({v} AS BIGINT)", 4),
+    "bigint": lambda v: _fixed_bytes(f"CAST({v} AS BIGINT)", 8),
+    "float": lambda v: _encode_ieee(v, "Float", "floatToIntBits", "FLOAT", 4),
+    "double": lambda v: _encode_ieee(v, "Double", "doubleToLongBits", "DOUBLE", 8),
+    "string": lambda v: f"encode(CAST({v} AS STRING), 'UTF-8')",
+    "timestamp": lambda v: _fixed_bytes(f"unix_millis(CAST({v} AS TIMESTAMP_LTZ))", 8),
+    "binary": lambda v: f"CAST({v} AS BINARY)",
+}
+
+# SQL type of each Hive type (return type of a decode function; parameter
+# type of an encode function — the same cast the template opens with)
+_SQL_TYPES = {
+    "boolean": "BOOLEAN", "tinyint": "TINYINT", "smallint": "SMALLINT",
+    "int": "INT", "bigint": "BIGINT", "float": "FLOAT", "double": "DOUBLE",
+    "string": "STRING", "binary": "BINARY", "timestamp": "TIMESTAMP_LTZ",
+}
+_ENCODE_PARAM = {**_SQL_TYPES, "tinyint": "STRING", "smallint": "STRING", "int": "BIGINT"}
+
+
+def decode_sql(operand: str, hive_type: str) -> str:
+    """SQL text of the dual decode (≙ the CassandraLazy* try-binary-first/
+    text-fallback rule, SURVEY.md §1.3) of ``operand``, a SQL expression
+    of BINARY type."""
+    if hive_type not in _DECODE_SQL:
+        raise ValueError(f"no decoder for hive type {hive_type!r}")
+    return _DECODE_SQL[hive_type](operand)
+
+
+def encode_sql(operand: str, hive_type: str) -> str:
+    """SQL text of the Cassandra marshaling of ``operand`` (≙
+    TableMapping.serialize + validator.fromString re-marshal,
+    serde/TableMapping.java:139-166)."""
+    if hive_type not in _ENCODE_SQL:
+        raise ValueError(f"no encoder for hive type {hive_type!r}")
+    return _ENCODE_SQL[hive_type](operand)
+
+
+# session UUID → codec functions registered in that session
+_REGISTERED: dict[str, set[str]] = {}
+
+
+def _apply(template, name: str, signature: str, col: Column) -> Column:
+    """``template`` applied to ``col``. A column reference is rendered
+    into the SQL text directly, valid in every operator. Any other
+    operand goes through the SQL temporary function ``name``, registered
+    first in the JVM's active session (thread-local, so a foreachBatch
+    callback registers in its micro-batch session) when that session
+    lacks it; Catalyst inlines the function body, but rejects it under
+    Generate, Sort and repartition operators and inside higher-order
+    function lambdas."""
+    node = col._jc.node()
+    if node.getClass().getSimpleName() == "UnresolvedAttribute":
+        parts = node.nameParts().mkString("\x00").split("\x00")
+        return F.expr(template(".".join(sql_ident(p) for p in parts)))
+    from pyspark import SparkContext
+    from pyspark.sql import SparkSession
+
+    jvm = SparkContext._active_spark_context._jvm
+    jsession = SparkSession._get_j_spark_session_class(jvm).active()
+    done = _REGISTERED.setdefault(jsession.sessionUUID(), set())
+    if name not in done:
+        jsession.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{signature} RETURN {template('v')}"
+        )
+        done.add(name)
+    return F.call_function(name, col)
 
 
 def decode_col(col: Column, hive_type: str) -> Column:
-    """Dual-decode of a BinaryType column to ``hive_type`` as a pure
-    codegen'd expression — no Python boundary (≙ the CassandraLazy*
-    try-binary-first/text-fallback rule, SURVEY.md §1.3; semantics
-    equivalence-tested against the Python decoders)."""
-    n = F.length(col)
-    if hive_type == "boolean":
-        first_nonzero = F.conv(F.substring(F.hex(col), 1, 2), 16, 10) != "0"
-        # F.trim strips spaces only; Java-trim all of \x00-\x20
-        low = F.lower(
-            F.regexp_replace(_ascii(col), r"^[\x00-\x20]+|[\x00-\x20]+$", "")
-        )
-        txt = F.when(low == "true", F.lit(True)).when(low == "false", F.lit(False))
-        return F.when(col.isNull(), F.lit(None).cast("boolean")).when(
-            n == 1, first_nonzero
-        ).otherwise(txt)
-    if hive_type in ("tinyint", "smallint"):
-        # text-only in the reference (Hive LazyByte/LazyShort,
-        # CassandraLazyFactory.java:56-59)
-        return _text_int(col, {"tinyint": "byte", "smallint": "short"}[hive_type])
-    if hive_type == "int":
-        return F.when(n == 4, _signed32(col).cast("int")).otherwise(
-            _text_int(col, "int")
-        )
-    if hive_type == "bigint":
-        return F.when(n == 8, _signed64(col)).otherwise(_text_int(col, "long"))
-    if hive_type == "float":
-        return F.when(n == 4, _reflect_float(_signed32(col))).otherwise(
-            _text_float(col, "float")
-        )
-    if hive_type == "double":
-        return F.when(n == 8, _reflect_double(_signed64(col))).otherwise(
-            _text_float(col, "double")
-        )
-    if hive_type == "string":
-        # decode() replaces invalid UTF-8 rather than nulling the row; the
-        # reference's LazyString behaves the same way (Hive Text replacement)
-        return F.decode(col, "UTF-8")
-    if hive_type == "timestamp":
-        m = F.regexp_extract(_ascii(col), _TS_TEXT, 1)
-        ms = _signed64(col)
-        in_range = ms.between(F.lit(_TS_MILLIS_MIN), F.lit(_TS_MILLIS_MAX))
-        return F.when(
-            n == 8, F.when(in_range, F.timestamp_millis(ms))
-        ).otherwise(F.when(m != "", m.cast("timestamp")))
-    if hive_type == "binary":
-        # whitespace-tolerant sniff matching decode_binary / commons-codec
-        # isArrayByteBase64: all bytes alphabet-or-whitespace → strip the
-        # whitespace, decode complete quads only (partial tail dropped)
-        s = _ascii(col)
-        sniffable = (n > 0) & s.rlike(r"^[A-Za-z0-9+/= \t\r\n]*$")
-        cleaned = F.regexp_replace(s, r"[ \t\r\n]", "")
-        head = cleaned.substr(
-            F.lit(1), F.length(cleaned) - F.pmod(F.length(cleaned), F.lit(4))
-        )
-        decoded = (
-            F.when(F.length(head) == 0, F.lit(b""))
-            .when(head.rlike(_B64_TEXT), F.unbase64(head))
-            .otherwise(col)
-        )
-        return F.when(sniffable, decoded).otherwise(col)
-    raise ValueError(f"no decoder for hive type {hive_type!r}")
+    """Dual-decode of a BinaryType column to ``hive_type`` — the
+    ``decode_sql`` template applied to a Column, no Python boundary
+    (semantics equivalence-tested against the Python decoders)."""
+    return _apply(
+        lambda v: decode_sql(v, hive_type),
+        f"hcs_decode_{hive_type}",
+        f"(v BINARY) RETURNS {_SQL_TYPES.get(hive_type)}",
+        col,
+    )
+
+
+def encode_col(col: Column, hive_type: str) -> Column:
+    """Encode a typed column to Cassandra-marshaled bytes — the
+    ``encode_sql`` template applied to a Column, no Python boundary."""
+    return _apply(
+        lambda v: encode_sql(v, hive_type),
+        f"hcs_encode_{hive_type}",
+        f"(v {_ENCODE_PARAM.get(hive_type)}) RETURNS BINARY",
+        col,
+    )
 
 
 def _coerce(v, hive_type: str):
@@ -560,49 +689,6 @@ def encode_col_arrow(col: Column, hive_type: str) -> Column:
         return s.map(enc)
 
     return _encode(col)
-
-
-def _unhex_fixed(value_as_long: Column, n_bytes: int) -> Column:
-    """Big-endian fixed-width bytes of a (sign-extended) long value."""
-    hx = F.lpad(F.hex(value_as_long), 16, "0")
-    return F.unhex(F.substring(hx, 17 - 2 * n_bytes, 2 * n_bytes))
-
-
-def encode_col(col: Column, hive_type: str) -> Column:
-    """Encode a typed column to Cassandra-marshaled bytes as a pure
-    codegen'd expression — no Python boundary (≙ TableMapping.serialize +
-    validator.fromString re-marshal, serde/TableMapping.java:139-166;
-    widths per LazyCassandraUtils.getCassandraType,
-    serde2/lazy/LazyCassandraUtils.java:17-41)."""
-    if hive_type == "boolean":
-        return F.when(
-            col.isNull(), F.lit(None).cast("binary")
-        ).when(col, F.lit(b"\x01")).otherwise(F.lit(b"\x00"))
-    if hive_type in ("tinyint", "smallint"):
-        return F.encode(col.cast("string"), "US-ASCII")
-    if hive_type == "int":
-        return _unhex_fixed(col.cast("long"), 4)
-    if hive_type == "bigint":
-        return _unhex_fixed(col, 8)
-    if hive_type == "float":
-        bits = F.reflect(
-            F.lit("java.lang.Float"), F.lit("floatToIntBits"), col.cast("float")
-        ).cast("long")
-        # reflect() cannot unbox a NULL argument — guard so NULL encodes to
-        # a NULL cell instead of a task failure
-        return F.when(col.isNotNull(), _unhex_fixed(bits, 4))
-    if hive_type == "double":
-        bits = F.reflect(
-            F.lit("java.lang.Double"), F.lit("doubleToLongBits"), col.cast("double")
-        ).cast("long")
-        return F.when(col.isNotNull(), _unhex_fixed(bits, 8))
-    if hive_type == "string":
-        return F.encode(col, "UTF-8")
-    if hive_type == "timestamp":
-        return _unhex_fixed(F.unix_millis(col), 8)
-    if hive_type == "binary":
-        return col
-    raise ValueError(f"no encoder for hive type {hive_type!r}")
 
 
 def decode_validator_col(col: Column, validator: str = "BytesType") -> Column:

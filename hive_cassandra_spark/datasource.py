@@ -182,7 +182,7 @@ class CellStoreReader(DataSourceReader):
             elif isinstance(f, LessThanOrEqual):
                 e = field <= f.value
             elif isinstance(f, In):
-                e = field.isin(list(f.values))
+                e = field.isin(list(f.value))
             else:  # IsNotNull
                 e = field.is_valid()
             expr = e if expr is None else expr & e

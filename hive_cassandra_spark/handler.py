@@ -112,8 +112,16 @@ def read_table(
 ) -> DataFrame:
     """Cell store → LWW-reconciled, decoded relational rows; an optional
     column subset prunes the fetch (projection pushdown, ≙ the read-column
-    slice predicate, HiveCassandraStandardColumnInputFormat.java:203-216)."""
-    cells = source.read_cells(spark, table.path)
+    slice predicate, HiveCassandraStandardColumnInputFormat.java:203-216).
+
+    The store is opened with the cell schema the mapping implies, so no
+    schema-inference job runs before the caller's action."""
+    from hive_cassandra_spark.datasource import _BASE_SCHEMA
+
+    schema = _BASE_SCHEMA + (
+        ", sub_column_name binary" if table.mapping.has_subcolumn else ""
+    )
+    cells = spark.read.schema(schema).parquet(table.path)
     return source.cells_to_table(
         cells,
         table.mapping,

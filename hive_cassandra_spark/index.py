@@ -16,8 +16,9 @@ written, split, paged, and pushdown-scanned by the exact machinery of
   ``pushFilters`` turns it into row-group-statistics pruning inside the
   pyarrow scan, so only the probed value's index row is materialized;
 - the fetched base row keys (the selectivity of the predicate, NOT the
-  table size) broadcast into a semi-join against the base store. The
-  base side is scanned but never shuffled; with the base store
+  table size) broadcast into a semi-join against the base store — the
+  only exchange in the plan is that broadcast. The base side is scanned
+  but never shuffled; with the base store
   row_key-sorted (sink.write_cells hash-distributes; compact_store
   sorts), a future JVM DSv2 runtime-filter push would prune it too.
 
@@ -60,16 +61,20 @@ def index_lookup(
     """All base cells of the rows where the indexed column equals
     ``value``: point-read the index row (pushdown-pruned scan of the
     index store), broadcast the matching base row keys, semi-join the
-    base store. Returns the full cell rows of the matching base rows."""
+    base store. Returns the matching base rows' cells in the base cell
+    layout (row_key, column_name, value, ts).
+
+    Both loads pass that layout as their schema, so neither asks the
+    Python data source to rediscover it from the store's footers. The
+    keys are not deduplicated: a semi-join is insensitive to duplicates,
+    and a DISTINCT would cost a shuffle."""
     from hive_cassandra_spark import datasource
 
     datasource.register(spark)
+    cells = spark.read.format("cassandra_cells").schema(datasource._BASE_SCHEMA)
     keys = (
-        spark.read.format("cassandra_cells")
-        .load(index_path)
+        cells.load(index_path)
         .filter(F.col("row_key") == F.lit(value))
         .select(F.col("column_name").alias("row_key"))
-        .distinct()
     )
-    base = spark.read.format("cassandra_cells").load(base_path)
-    return base.join(F.broadcast(keys), "row_key", "semi")
+    return cells.load(base_path).join(F.broadcast(keys), "row_key", "semi")

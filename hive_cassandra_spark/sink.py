@@ -27,9 +27,9 @@ streamed partition-by-partition, never collected.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from hive_cassandra_spark.codecs import encode_col
+from hive_cassandra_spark.codecs import encode_sql, sql_binary, sql_ident
 from hive_cassandra_spark.mapping import ColumnMapping
 
 # Reference defaults carried as option schema (AbstractColumnSerDe.java:66-75).
@@ -48,13 +48,13 @@ def normalize_consistency(level: str | None) -> str:
     return "ONE"
 
 
-def _ts_column(clock_millis: int | None) -> Column:
+def _ts_sql(clock_millis: int | None) -> str:
     """Writer-assigned cell timestamp: injectable for reproducible tests,
     else epoch millis at write time (≙ System.currentTimeMillis() per cell,
     RegularTableMapping.java:84,94)."""
     if clock_millis is not None:
-        return F.lit(clock_millis).cast("long")
-    return F.unix_millis(F.current_timestamp())
+        return f"CAST({int(clock_millis)} AS BIGINT)"
+    return "unix_millis(current_timestamp())"
 
 
 def to_cells(
@@ -78,58 +78,52 @@ def to_cells(
     Output schema: (row_key, column_name, [sub_column_name,] value, ts),
     all binary except ts. Null values produce no cell (a null cell is a
     delete/tombstone in Cassandra; the reference likewise skips them).
+    Every encode is a ``codecs.encode_sql`` template, rendered into one
+    ``selectExpr`` that runs once per row.
     """
     if len(hive_types) != len(mapping.entries):
         raise ValueError(
             f"arity mismatch: {len(hive_types)} types vs {len(mapping.entries)} mapping entries"
         )
-    cols = df.columns
-    key_bytes = encode_col(F.col(cols[mapping.key_index]), hive_types[mapping.key_index])
-    ts = _ts_column(clock_millis)
+    cols = [sql_ident(c) for c in df.columns]
+    key = f"{encode_sql(cols[mapping.key_index], hive_types[mapping.key_index])} AS row_key"
+    ts = f"{_ts_sql(clock_millis)} AS ts"
 
     if mapping.transposed:
-        entry_to_idx = {e: i for i, e in enumerate(mapping.entries)}
-        col_i = entry_to_idx[":column"]
-        val_i = entry_to_idx[":value"]
-        out = [
-            key_bytes.alias("row_key"),
-            encode_col(F.col(cols[col_i]), hive_types[col_i]).alias("column_name"),
-        ]
+        idx = {e: i for i, e in enumerate(mapping.entries)}
+        fields = [(":column", "column_name")]
         if mapping.has_subcolumn:
-            sub_i = entry_to_idx[":subcolumn"]
-            out.append(
-                encode_col(F.col(cols[sub_i]), hive_types[sub_i]).alias("sub_column_name")
-            )
-        out += [
-            _encode_value(F.col(cols[val_i]), hive_types[val_i]).alias("value"),
-            ts.alias("ts"),
+            fields.append((":subcolumn", "sub_column_name"))
+        out = [
+            f"{encode_sql(cols[idx[e]], hive_types[idx[e]])} AS {name}"
+            for e, name in fields
         ]
-        return df.select(*out).filter(F.col("value").isNotNull())
+        val_i = idx[":value"]
+        value = f"{_encode_value_sql(cols[val_i], hive_types[val_i])} AS value"
+        return df.selectExpr(key, *out, value, ts).filter("value IS NOT NULL")
 
-    # regular shape: encode every plain mapped column to binary first (a
-    # pandas_udf can't live inside a higher-order lambda), build the
-    # (name, value) struct array from the already-binary columns, explode.
-    # cf-map columns fan out via their own explode and union in — all
-    # narrow transforms, no shuffle.
-    cf_map_idx = set(mapping.cf_map_indexes)
+    # regular shape: encode the key and every plain mapped column once per
+    # row in a projection below the generator (a generator over the
+    # templates would re-encode the key per cell and, with a reflect()
+    # body, drop out of whole-stage codegen), then inline() one
+    # (name, value) struct per column. cf-map columns fan out via their
+    # own explode and union in — all narrow transforms, no shuffle.
+    cf_map_idx = sorted(mapping.cf_map_indexes)
     plain_idx = [
         i for i in range(len(cols)) if i != mapping.key_index and i not in cf_map_idx
     ]
-    enc = df.select(
-        key_bytes.alias("row_key"),
-        *[_encode_value(F.col(cols[i]), hive_types[i]).alias(f"__v{i}") for i in plain_idx],
-        *[F.col(cols[i]).alias(f"__m{i}") for i in cf_map_idx],
+    enc = df.selectExpr(
+        key,
+        *[f"{_encode_value_sql(cols[i], hive_types[i])} AS __v{i}" for i in plain_idx],
+        *[f"{cols[i]} AS __m{i}" for i in cf_map_idx],
+        ts,
     )
     structs = [
-        F.struct(
-            F.lit(mapping.entries[i]).cast("binary").alias("column_name"),
-            F.col(f"__v{i}").alias("value"),
-        )
+        f"named_struct('column_name', {sql_binary(mapping.entries[i])}, 'value', __v{i})"
         for i in plain_idx
     ]
     out = (
-        enc.select("row_key", F.explode(F.array(*structs)).alias("cell"))
-        .select("row_key", "cell.column_name", "cell.value")
+        enc.selectExpr("row_key", f"inline(array({', '.join(structs)}))", "ts")
         if structs
         else None
     )
@@ -137,15 +131,16 @@ def to_cells(
         # map<string, T> column: one cell per entry, key utf-8, value encoded
         # per the map's declared value type ('map<string,double>' → 'double')
         vtype = _map_value_type(hive_types[i])
-        m = enc.select("row_key", F.explode(F.col(f"__m{i}")).alias("k", "v")).select(
+        m = enc.selectExpr("row_key", f"explode(__m{i}) AS (k, v)", "ts").selectExpr(
             "row_key",
-            F.col("k").cast("binary").alias("column_name"),
-            encode_col(F.col("v"), vtype).alias("value"),
+            "CAST(k AS BINARY) AS column_name",
+            f"{encode_sql('v', vtype)} AS value",
+            "ts",
         )
         out = m if out is None else out.unionByName(m)
     if out is None:
         raise ValueError("mapping has no value columns")
-    return out.filter(F.col("value").isNotNull()).withColumn("ts", ts)
+    return out.filter("value IS NOT NULL")
 
 
 def _map_value_type(map_type: str) -> str:
@@ -161,13 +156,13 @@ def is_complex_type(hive_type: str) -> bool:
     return t.startswith(("struct", "array", "map", "uniontype"))
 
 
-def _encode_value(col: Column, hive_type: str) -> Column:
+def _encode_value_sql(operand: str, hive_type: str) -> str:
     """Primitive → validator bytes; complex (struct/array/map) → JSON text
     bytes (≙ SerDeUtils.getJSONString under useJsonSerialize,
     TableMapping.java:101-133 — non-primitives flatten to JSON on write)."""
     if is_complex_type(hive_type):
-        return F.to_json(col).cast("binary")
-    return encode_col(col, hive_type)
+        return f"CAST(to_json({operand}) AS BINARY)"
+    return encode_sql(operand, hive_type)
 
 
 def write_cells(
@@ -214,7 +209,7 @@ def stream_to_cells(
 ):
     """Streaming face of the cell sink: every micro-batch encodes to cells
     and appends to the store; versions reconcile at read time via LWW
-    (source.lww_latest), exactly as Cassandra reconciles the reference's
+    (source.cells_to_table), exactly as Cassandra reconciles the reference's
     per-cell timestamped mutations. Append-only parquet + idempotent LWW
     merge means at-least-once delivery upgrades to effectively-once
     semantics for the reader.
@@ -1086,7 +1081,24 @@ def occ_read_table(
         files = by_version[max(by_version)]
     else:
         files = [f for fs in by_version.values() for f in fs]
-    return spark.read.parquet(*files)
+    return _read_parts(spark, files)
+
+
+def _read_parts(spark, files: list):
+    """Read committed part files with the Spark schema the first part's
+    footer records (the file schema inference would open) — a
+    metadata-only footer read instead of an inference job per read."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    meta = pq.read_schema(files[0]).metadata or {}
+    spark_schema = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    reader = spark.read
+    if spark_schema is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(spark_schema)))
+    return reader.parquet(*files)
 
 
 def _occ_snapshot_floor(path: str, cap: int | None = None) -> int:
@@ -1175,7 +1187,7 @@ def occ_read(
         if all_parts:
             # no visible version, but the store HAS a cell shape — take
             # the schema from any part footer (metadata-only read)
-            return spark.read.parquet(all_parts[-1]).limit(0)
+            return _read_parts(spark, all_parts[-1:]).limit(0)
         from pyspark.sql import types as T
 
         return spark.createDataFrame(
@@ -1189,7 +1201,7 @@ def occ_read(
                 ]
             ),
         )
-    return spark.read.parquet(*files)
+    return _read_parts(spark, files)
 
 
 def occ_recover(path: str, min_age_s: float = 0.0) -> dict:

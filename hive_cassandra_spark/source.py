@@ -11,10 +11,12 @@ the CassandraLazy* codecs (input/LazyCassandraRow.java:69-106).
 
 Spark-first re-expression:
 
-- *regular*: LWW-compact cell versions on (row_key, column_name) by ts —
-  the semantics Cassandra's reconciler gives the reference for free — then
-  one keyed pivot back to wide rows and a vectorized per-type decode.
-  One shuffle, on the row key (the table's natural partitioning).
+- *regular*: one ``groupBy(row_key)`` reconciles and pivots at once —
+  per mapped column the (ts, value) struct-max of its cells, the
+  last-write-wins rule Cassandra's reconciler gives the reference for
+  free — then tombstoned winners and ghost rows drop and every column
+  decodes in one SQL-text projection. One shuffle, on the row key (the
+  table's natural partitioning).
 - *transposed*: pure projection + decode; **no shuffle at all** (the
   reference's wide-row iterator, ColumnFamilyWideRowRecordReader.java:240-429,
   exists only to page cells over Thrift — columnar storage makes it moot).
@@ -32,19 +34,24 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from hive_cassandra_spark.codecs import decode_col
+from hive_cassandra_spark.codecs import (
+    decode_sql,
+    sql_binary,
+    sql_ident,
+    sql_str,
+)
 from hive_cassandra_spark.mapping import ColumnMapping
 
 
-def _decode_value(col: F.Column, hive_type: str) -> F.Column:
+def _decode_value_sql(operand: str, hive_type: str) -> str:
     """Primitive → dual binary/text decode; complex (struct/array/map) →
-    parse the JSON text the write path produced (sink._encode_value,
+    parse the JSON text the write path produced (sink._encode_value_sql,
     ≙ TableMapping.java:101-133)."""
     from hive_cassandra_spark.sink import is_complex_type
 
     if is_complex_type(hive_type):
-        return F.from_json(col.cast("string"), hive_type)
-    return decode_col(col, hive_type)
+        return f"from_json(CAST({operand} AS STRING), {sql_str(hive_type)})"
+    return decode_sql(operand, hive_type)
 
 
 def read_cells(spark: SparkSession, path: str) -> DataFrame:
@@ -56,7 +63,7 @@ def _live(cells: DataFrame) -> DataFrame:
     """Drop dead/tombstone cells (≙ isLive() filter,
     CassandraHiveRecordReader.java:198-214, and the DSP-465 ghost-row skip
     :139-147)."""
-    return cells.filter(F.col("value").isNotNull())
+    return cells.filter("value IS NOT NULL")
 
 
 def expire_cells(
@@ -85,9 +92,9 @@ def apply_cdc_batch(cells: DataFrame, changes: DataFrame) -> DataFrame:
     cell key with ``value`` NULL at a newer ``ts``. Union + last-write-
     wins compaction resolves everything in one keyed aggregation
     (``max_by`` keeps the newest version even when it is the NULL
-    tombstone — pinned by test_source_sink), and the standard ``_live``
-    filter then drops tombstoned cells, so a fully-deleted row vanishes
-    from the pivoted read exactly like a ghost row.
+    tombstone — pinned by test_source_sink), and ``cells_to_table`` then
+    drops tombstoned winners, so a fully-deleted row vanishes from the
+    pivoted read exactly like a ghost row.
 
     Cassandra's distributed-delete semantics, public data model (the
     reference inherits reconciliation from the server and, being Hive
@@ -125,98 +132,96 @@ def cells_to_table(
     columns (projection pushdown; key always implied, as the reference
     excludes it from the slice predicate —
     HiveCassandraStandardColumnInputFormat.java:203-216).
+
+    A regular mapping reconciles and pivots in ONE ``groupBy(row_key)``:
+    per mapped column the (ts, value) struct-max of its cells — highest
+    ts wins, ties to the greater value, the ``sink._compact_winners``
+    rule, so a read always equals what compaction would keep. Dead
+    winners (tombstones) read as NULL afterwards and a row with no live
+    winner is dropped (the ghost-row skip): reconciling before dropping
+    is what keeps a newer tombstone from resurrecting an older value.
     """
     if len(column_names) != len(mapping.entries) or len(hive_types) != len(
         mapping.entries
     ):
         raise ValueError("schema arity must match mapping arity")
-    live = _live(cells)
 
     if mapping.transposed:
-        entry_to_idx = {e: i for i, e in enumerate(mapping.entries)}
-        out = [
-            decode_col(F.col("row_key"), hive_types[entry_to_idx[":key"]]).alias(
-                column_names[entry_to_idx[":key"]]
-            ),
-            decode_col(F.col("column_name"), hive_types[entry_to_idx[":column"]]).alias(
-                column_names[entry_to_idx[":column"]]
-            ),
-        ]
+        idx = {e: i for i, e in enumerate(mapping.entries)}
+        fields = [(":key", "row_key"), (":column", "column_name")]
         if mapping.has_subcolumn:
-            out.append(
-                decode_col(
-                    F.col("sub_column_name"), hive_types[entry_to_idx[":subcolumn"]]
-                ).alias(column_names[entry_to_idx[":subcolumn"]])
-            )
-        out.append(
-            _decode_value(F.col("value"), hive_types[entry_to_idx[":value"]]).alias(
-                column_names[entry_to_idx[":value"]]
-            )
+            fields.append((":subcolumn", "sub_column_name"))
+        fields.append((":value", "value"))
+        return _live(cells).selectExpr(
+            *[
+                f"{_decode_value_sql(src, hive_types[idx[e]])}"
+                f" AS {sql_ident(column_names[idx[e]])}"
+                for e, src in fields
+            ]
         )
-        return live.select(*out)
 
-    cf_map_idx = set(mapping.cf_map_indexes)
+    cf_map_idx = sorted(mapping.cf_map_indexes)
     plain_idx = [
         i for i in range(len(mapping.entries)) if i != mapping.key_index and i not in cf_map_idx
     ]
     if wanted_columns is not None:
         plain_idx = [i for i in plain_idx if column_names[i] in wanted_columns]
-        cf_map_idx = {i for i in cf_map_idx if column_names[i] in wanted_columns}
-    wanted_cell_names = [mapping.entries[i] for i in plain_idx]
+        cf_map_idx = [i for i in cf_map_idx if column_names[i] in wanted_columns]
+    names = ", ".join(sql_binary(mapping.entries[i]) for i in plain_idx)
 
     # Projection pushdown: restrict cells before the shuffle. With no cf-map
     # column the IN-filter also reaches the parquet scan (PushedFilters).
     if not cf_map_idx:
-        live = live.filter(
-            F.col("column_name").cast("string").isin(wanted_cell_names)
-        )
+        cells = cells.filter(f"column_name IN ({names})")
 
-    latest = lww_latest(live)
-    name_str = F.col("column_name").cast("string")
-    aggs = []
-    for i in plain_idx:
-        aggs.append(
-            F.max(
-                F.when(name_str == mapping.entries[i], F.col("value"))
-            ).alias(f"__v{i}")
+    aggs = [
+        F.expr(
+            "max(struct(ts, value)) FILTER (WHERE column_name = "
+            f"{sql_binary(mapping.entries[i])}) AS __w{i}"
         )
-    for i in cf_map_idx:
-        # everything not claimed by a plain mapped column belongs to the map
-        aggs.append(
-            F.map_from_entries(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            ~name_str.isin(
-                                [mapping.entries[j] for j in plain_idx]
-                            ),
-                            F.struct(name_str.alias("key"), F.col("value").alias("value")),
-                        )
-                    )
-                )
-            ).alias(f"__m{i}")
-        )
-    wide = latest.groupBy("row_key").agg(*aggs)
-
-    out = [
-        decode_col(F.col("row_key"), hive_types[mapping.key_index]).alias(
-            column_names[mapping.key_index]
-        )
+        for i in plain_idx
     ]
-    for i in plain_idx:
-        out.append(_decode_value(F.col(f"__v{i}"), hive_types[i]).alias(column_names[i]))
-    for i in cf_map_idx:
-        # decode the map's binary values per the declared value type; keys
-        # are utf-8 strings (validated map<string,?> —
-        # CassandraColumnSerDe.java:66-81). transform_values keeps it JVM-side
-        # for the string case; other value types decode via a post-explode
-        # pass by the caller if needed.
-        out.append(
-            F.transform_values(
-                F.col(f"__m{i}"), lambda _, v: v.cast("string")
-            ).alias(column_names[i])
+    # everything not claimed by a plain mapped column belongs to the map;
+    # its entries sort by (key, ts, value), so a key's winner is its last
+    claim = f" FILTER (WHERE column_name NOT IN ({names}))" if names else ""
+    aggs += [
+        F.expr(
+            "array_sort(collect_list(struct(CAST(column_name AS STRING) AS key,"
+            f" ts, value)){claim}) AS __m{i}"
         )
-    return wide.select(*out)
+        for i in cf_map_idx
+    ]
+    wide = cells.groupBy("row_key").agg(*aggs).selectExpr(
+        "row_key",
+        *[f"__w{i}.value AS __v{i}" for i in plain_idx],
+        *[
+            f"filter(__m{i}, (x, j) -> x.value IS NOT NULL"
+            f" AND NOT get(__m{i}, j + 1).key <=> x.key) AS __m{i}"
+            for i in cf_map_idx
+        ],
+    )
+    wide = wide.filter(
+        " OR ".join(
+            [f"__v{i} IS NOT NULL" for i in plain_idx]
+            + [f"size(__m{i}) > 0" for i in cf_map_idx]
+        )
+    )
+    out = [
+        f"{decode_sql('row_key', hive_types[mapping.key_index])}"
+        f" AS {sql_ident(column_names[mapping.key_index])}"
+    ]
+    out += [
+        f"{_decode_value_sql(f'__v{i}', hive_types[i])} AS {sql_ident(column_names[i])}"
+        for i in plain_idx
+    ]
+    # map keys are utf-8 strings (validated map<string,?> —
+    # CassandraColumnSerDe.java:66-81); values read back as strings
+    out += [
+        f"map_from_entries(transform(__m{i}, x -> struct(x.key AS key,"
+        f" CAST(x.value AS STRING) AS value))) AS {sql_ident(column_names[i])}"
+        for i in cf_map_idx
+    ]
+    return wide.selectExpr(*out)
 
 
 def paged_cells(cells: DataFrame, page_size: int = 1000) -> DataFrame:
@@ -309,7 +314,7 @@ def slice_cells(
 def scrub_cells(cells: DataFrame, column_types: dict[bytes, str]) -> DataFrame:
     """Store scrub (≙ Cassandra's ``nodetool scrub`` pass over sstables):
     flag every live cell whose value fails its column's DECLARED decode —
-    the full dual binary/text rule of ``codecs.decode_col``, so a cell is
+    the full dual binary/text rule of ``codecs.decode_sql``, so a cell is
     corrupt only when neither the fixed-width binary form nor the text
     fallback parses. Adds a ``corrupt`` boolean; columns not in
     ``column_types`` are never flagged (no declared type → no contract to
@@ -318,17 +323,9 @@ def scrub_cells(cells: DataFrame, column_types: dict[bytes, str]) -> DataFrame:
     Pure codegen'd projection — zero shuffle, no Python; at 100 TB the
     scrub is exactly one scan, and quarantining is a filter on its
     output."""
-    from hive_cassandra_spark import codecs
-
-    failed = None
-    for cname, htype in column_types.items():
-        this = (F.col("column_name") == F.lit(cname)) & codecs.decode_col(
-            F.col("value"), htype
-        ).isNull()
-        failed = this if failed is None else (failed | this)
-    corrupt = (
-        F.col("value").isNotNull() & failed
-        if failed is not None
-        else F.lit(False)
+    failed = " OR ".join(
+        f"(column_name = {sql_binary(cname)} AND {decode_sql('value', htype)} IS NULL)"
+        for cname, htype in column_types.items()
     )
+    corrupt = F.expr(f"value IS NOT NULL AND ({failed})" if failed else "false")
     return cells.withColumn("corrupt", corrupt)

@@ -279,3 +279,25 @@ def test_decode_expression_fuzz_random_bytes(spark, hive_type):
         else:
             ok = a == b
         assert ok, (hive_type, bytes(r.cell).hex(), a, b)
+
+
+@pytest.mark.parametrize(
+    "hive_type",
+    ["boolean", "tinyint", "smallint", "int", "bigint", "float", "double",
+     "timestamp", "binary", "string"],
+)
+def test_function_bound_operand_matches_column_reference(spark, hive_type):
+    # an operand that is not a column reference binds through the SQL
+    # temporary function; it must decode exactly like the rendered template
+    rows = [(b,) for b in _corpus_for(hive_type)] + [(None,)]
+    df = spark.createDataFrame(rows, "cell binary")
+    both = df.select(
+        codecs.decode_col(F.col("cell"), hive_type).alias("ref"),
+        codecs.decode_col(F.coalesce(F.col("cell")), hive_type).alias("fn"),
+    ).collect()
+    for r in both:
+        a, b = r.ref, r.fn
+        if isinstance(a, float) and isinstance(b, float):
+            assert (math.isnan(a) and math.isnan(b)) or a == b
+        else:
+            assert a == b, (hive_type, a, b)

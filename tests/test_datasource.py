@@ -85,6 +85,18 @@ def test_pushed_slice_filter_correct_results(spark, store):
         .groupBy("seg").count()
     )
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    # an IN list on the cell key columns is pushed as an In filter
+    names = [b"c_mktsegment", b"c_name"]
+    keys = [r.row_key for r in df.select("row_key").distinct().limit(3).collect()]
+    for col, values in (("column_name", names), ("row_key", keys)):
+        got = df.filter(F.col(col).isin(values)).select("row_key", "column_name", "value")
+        want = (
+            spark.read.parquet(store)
+            .filter(F.col(col).isin(values))
+            .select("row_key", "column_name", "value")
+        )
+        rows = sorted(map(tuple, got.collect()))
+        assert rows and rows == sorted(map(tuple, want.collect()))
 
 
 def test_read_pages_are_bounded_and_ordered(spark, store):

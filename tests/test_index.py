@@ -71,12 +71,12 @@ def test_lookup_plan_broadcasts_keys_no_base_shuffle(spark, tmp_path):
     rows = index.index_lookup(spark, base, idx_path, b"gold")
     plan = rows._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan, plan
-    # the base-store (stream) side must not be exchanged; the one allowed
-    # Exchange is the key-side distinct INSIDE the broadcast build, whose
-    # input is the probed value's index row — selectivity-sized, not
-    # table-sized
+    # the base-store (stream) side must not be exchanged, and the key side
+    # is broadcast as fetched: a semi-join ignores duplicate keys, so no
+    # DISTINCT shuffle precedes the build
     stream_side = plan.split("BroadcastExchange")[0]
     assert "Exchange" not in stream_side, plan
+    assert "hashpartitioning" not in plan, plan
 
 
 def test_index_lookup_via_sql_views(spark, tmp_path):

@@ -384,3 +384,62 @@ def test_quality_model_train_no_occurrence_distinct_exchange(spark, sf_dir):
         # trainer). The inferred filter's signature is the transform
         # duplicated under size().
         assert "size(array_distinct" not in p, p
+
+
+def _lineitem_table(spark, sf_dir, path):
+    from hive_cassandra_spark import handler
+
+    cols = ["l_orderkey", "l_partkey", "l_suppkey", "l_quantity", "l_returnflag"]
+    types = ["bigint", "bigint", "bigint", "double", "string"]
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
+        F.monotonically_increasing_id().alias("l_id"), *cols
+    )
+    table = handler.define_table("li", path, ["l_id", *cols], ["bigint", *types])
+    handler.write_table(li, table, clock_millis=1)
+    return table
+
+
+def test_regular_cells_to_table_single_exchange(spark, sf_dir, tmp_path):
+    """A regular mapping reconciles (last write wins) and pivots in ONE
+    aggregate keyed on row_key: exactly one Exchange, with or without a
+    column subset."""
+    import re
+
+    from hive_cassandra_spark import handler
+
+    table = _lineitem_table(spark, sf_dir, str(tmp_path / "li"))
+    for wanted in (None, ["l_quantity", "l_returnflag"]):
+        df = handler.read_table(spark, table, wanted_columns=wanted)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+        assert "hashpartitioning(row_key" in plan, plan
+
+
+def _jobs_in_group(spark, group, build):
+    """Spark jobs launched while ``build()`` runs, counted per job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_typed_and_occ_reads_launch_no_job_before_the_action(spark, sf_dir, tmp_path):
+    """Opening a store runs no schema-inference job: read_table uses the
+    schema the mapping implies, occ_read the schema a part footer
+    records. Only the caller's action launches jobs."""
+    from hive_cassandra_spark import handler, sink
+
+    table = _lineitem_table(spark, sf_dir, str(tmp_path / "li"))
+    df, n = _jobs_in_group(spark, "hcs-read-table", lambda: handler.read_table(spark, table))
+    assert n == 0
+    store = str(tmp_path / "occ")
+    cells = spark.read.parquet(table.path).limit(500)
+    for v in range(2):
+        assert sink.occ_commit(spark, store, cells, expected_version=v)["committed"]
+    occ, n = _jobs_in_group(spark, "hcs-occ-read", lambda: sink.occ_read(spark, store))
+    assert n == 0
+    assert occ.schema == spark.read.parquet(table.path).schema
+    assert occ.count() == 1000 and df.count() > 0

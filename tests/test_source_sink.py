@@ -62,6 +62,60 @@ def test_lww_keeps_newest_cell(spark):
     assert got[2] == ("beta", -2.25)
 
 
+def test_newer_tombstone_does_not_resurrect(spark):
+    # reconcile first, then drop dead winners: a tombstone newer than the
+    # only live version deletes the cell (and, with no other live cell,
+    # the row) instead of letting the older value show through
+    m = parse_mapping(":key,name,score", 3)
+    cells = spark.createDataFrame(
+        [
+            (encode_long(1), b"name", encode_string("alive"), 1),
+            (encode_long(1), b"name", None, 2),
+            (encode_long(2), b"name", encode_string("gone"), 1),
+            (encode_long(2), b"name", None, 2),
+            (encode_long(2), b"score", encode_double(1.5), 1),
+        ],
+        "row_key binary, column_name binary, value binary, ts long",
+    )
+    back = source.cells_to_table(cells, m, ["id", "name", "score"], ["bigint", "string", "double"])
+    assert sorted(map(tuple, back.collect())) == [(2, None, 1.5)]
+
+
+def test_read_equals_compact_winner_on_ts_tie(spark, tmp_path):
+    # the read's reconciliation is compaction's: highest ts, ties to the
+    # greater value, a winning tombstone deletes
+    from hive_cassandra_spark import datasource
+
+    datasource.register(spark)
+    store = str(tmp_path / "tie")
+    cells = spark.createDataFrame(
+        [
+            (b"k1", b"name", b"zz", 5),
+            (b"k1", b"name", b"aa", 5),
+            (b"k1", b"note", None, 7),
+            (b"k1", b"note", b"n1", 7),
+            (b"k2", b"name", b"old", 10),
+            (b"k2", b"name", None, 30),
+            (b"k2", b"note", b"kept", 1),
+            (b"k3", b"name", b"v2", 20),
+            (b"k3", b"name", b"v1", 10),
+        ],
+        "row_key binary, column_name binary, value binary, ts long",
+    )
+    cells.write.format("cassandra_cells").mode("overwrite").save(store)
+    m = parse_mapping(":key,name,note", 3)
+    cols, types = ["k", "name", "note"], ["string"] * 3
+
+    def read():
+        raw = spark.read.format("cassandra_cells").load(store)
+        return sorted(map(tuple, source.cells_to_table(raw, m, cols, types).collect()))
+
+    before = read()
+    assert before == [("k1", "zz", "n1"), ("k2", None, "kept"), ("k3", "v2", None)]
+    sink.compact_store(spark, store)
+    assert read() == before
+
+
 def test_projection_pushdown_prunes_cells(spark):
     m = parse_mapping(":key,name,score,flag,ts", 5)
     cells = sink.to_cells(_typed(spark), m, TYPES, clock_millis=1)

@@ -63,7 +63,9 @@ def window(a: tuple[int, ...] | None, b: tuple[int, ...] | None) -> dict:
         return {"steal_pct": None, "busy_pct": None}
     n = min(len(a), len(b))
     d = [b[i] - a[i] for i in range(n)]
-    total = sum(d)
+    # guest and guest_nice (fields 9-10) are already inside user and
+    # nice: the total is user..steal only
+    total = sum(d[:8])
     if total <= 0:
         return {"steal_pct": None, "busy_pct": None}
     steal = d[7] if n > 7 else 0

@@ -76,6 +76,13 @@ def _baselines_from_md() -> dict[str, float]:
     return out
 
 
+def kept_median(trials: list[float]) -> float | None:
+    """Median wall of the kept trials, or None when every trial was
+    discarded for steal (sustained contention) — the discards stay in
+    the artifact either way."""
+    return round(statistics.median(trials), 3) if trials else None
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--trials", type=int, default=5)
@@ -141,20 +148,20 @@ def main() -> None:
                 continue
             trials.append(wall)
             steals.append(hw["steal_pct"])
-        med = statistics.median(trials)
+        med = kept_median(trials)
         base = baselines.get(name)
         results[name] = {
             "trials": trials,
             "steal_pct_per_trial": steals,
             "discarded_steal_trials": discarded,
-            "median": round(med, 3),
+            "median": med,
             "baseline": base,
             "ratio_vs_baseline": (
-                round(med / base, 2) if base else None
+                round(med / base, 2) if base and med is not None else None
             ),
         }
         print(
-            f"# {name}: median {med:.2f}s trials={trials} "
+            f"# {name}: median {med}s trials={trials} "
             f"steal={steals} discards={len(discarded)}",
             file=sys.stderr,
         )
