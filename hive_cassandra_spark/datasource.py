@@ -83,7 +83,7 @@ _OPTIONAL_COLS = ("sub_column_name", "ttl_s")
 
 def _store_files(path: str) -> list[str]:
     if os.path.isdir(path):
-        return sorted(glob.glob(os.path.join(path, "*.parquet")))
+        return sorted(glob.glob(os.path.join(glob.escape(path), "*.parquet")))
     return sorted(glob.glob(path))
 
 
@@ -380,7 +380,9 @@ class CellStoreWriter(DataSourceArrowWriter):
         import glob as _glob
 
         if self.overwrite:
-            for old in _glob.glob(os.path.join(self.path, "*.parquet")):
+            for old in _glob.glob(
+                os.path.join(_glob.escape(self.path), "*.parquet")
+            ):
                 os.remove(old)
         for i, m in enumerate(messages):
             if m and m.tmp_file:
@@ -409,7 +411,9 @@ class CellStoreWriter(DataSourceArrowWriter):
         import glob as _glob
 
         for stale in _glob.glob(
-            os.path.join(self.path, f"._tmp-{self.job_id}-*.parquet")
+            os.path.join(
+                _glob.escape(self.path), f"._tmp-{self.job_id}-*.parquet"
+            )
         ):
             try:
                 os.remove(stale)
@@ -437,7 +441,9 @@ class CellStoreStreamWriter(CellStoreWriter, DataSourceStreamArrowWriter):
     # row-group temp file per task, streaming or not.
 
     def _batch_parts(self, batch_id: int) -> str:
-        return os.path.join(self.path, f"part-*-b{batch_id:09d}-*.parquet")
+        return os.path.join(
+            glob.escape(self.path), f"part-*-b{batch_id:09d}-*.parquet"
+        )
 
     def commit(self, messages, batchId: int) -> None:
         import glob as _glob
@@ -454,7 +460,9 @@ class CellStoreStreamWriter(CellStoreWriter, DataSourceStreamArrowWriter):
         if self.overwrite:
             # complete/truncate output mode: each batch REPLACES the store
             # (the batch-overwrite semantics, once per micro-batch)
-            for old in _glob.glob(os.path.join(self.path, "*.parquet")):
+            for old in _glob.glob(
+                os.path.join(_glob.escape(self.path), "*.parquet")
+            ):
                 os.remove(old)
         for stale in _glob.glob(self._batch_parts(batchId)):
             os.remove(stale)  # a crashed attempt of THIS batch half-committed

@@ -1494,8 +1494,6 @@ def update_ivfpq_index_occ(
     stale writer fails closed and retries against refreshed state
     (the update_postings_index_occ grace discipline). Returns
     {vecs_added, version, conflicts, already_applied}."""
-    import time as _time
-
     from hive_cassandra_spark import sink
 
     conflicts = 0
@@ -1585,21 +1583,7 @@ def update_ivfpq_index_occ(
                 "already_applied": False,
             }
         conflicts += 1
-        if resc["claim_pending"]:
-            # claim age rides the pluggable backend (an object-store
-            # deployment has no local claim dir to stat)
-            while True:
-                if sink.store_version(path) > resc["version"]:
-                    break
-                age = sink.OCC_CLAIM_BACKEND.claim_age_s(
-                    path, resc["version"] + 1
-                )
-                if age == float("inf"):
-                    break
-                if age >= claim_grace_s:
-                    sink.occ_recover(path, min_age_s=claim_grace_s)
-                    break
-                _time.sleep(min(0.2, claim_grace_s - age))
+        sink._occ_wait_out_claim(path, resc, claim_grace_s)
     raise RuntimeError(
         f"update_ivfpq_index_occ: {max_retries} consecutive commit "
         f"conflicts on {path} — a writer is outpacing index maintenance"

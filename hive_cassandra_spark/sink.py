@@ -27,6 +27,13 @@ streamed partition-by-partition, never collected.
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
+import time
+import uuid
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, functions as F
 
 from hive_cassandra_spark.codecs import encode_sql, sql_binary, sql_ident
@@ -349,7 +356,7 @@ def compact_store(
     )
     extras = [c for c in ("ttl_s",) if c in cols]
     cells_in = cells.count()
-    files_in = len(_glob.glob(os.path.join(path, "*.parquet")))
+    files_in = len(_glob.glob(os.path.join(_glob.escape(path), "*.parquet")))
 
     flat = _compact_winners(
         cells, key, extras, drop_tombstones, now_millis, gc_grace_s,
@@ -364,8 +371,8 @@ def compact_store(
         .mode("overwrite")
         .save(tmp_dir)
     )
-    cells_out = spark.read.parquet(tmp_dir).count()
-    files_out = len(_glob.glob(os.path.join(tmp_dir, "*.parquet")))
+    cells_out = spark.read.parquet(_hadoop_path(tmp_dir)).count()
+    files_out = len(_glob.glob(os.path.join(_glob.escape(tmp_dir), "*.parquet")))
     old_dir = f"{path.rstrip('/')}.old-{token}"
     os.rename(path, old_dir)
     os.rename(tmp_dir, path)
@@ -407,8 +414,8 @@ def recover_store(path: str) -> dict:
 
     base = path.rstrip("/")
     rolled = dropped_partial = dropped_old = 0
-    compacting = sorted(_glob.glob(f"{base}.compacting-*"))
-    olds = sorted(_glob.glob(f"{base}.old-*"))
+    compacting = sorted(_glob.glob(f"{_glob.escape(base)}.compacting-*"))
+    olds = sorted(_glob.glob(f"{_glob.escape(base)}.old-*"))
     if not os.path.exists(base):
         # state 2: finish the interrupted swap with the newest complete
         # compaction output; its paired .old- dir is then obsolete
@@ -473,7 +480,7 @@ def vacuum_commit_log(spark, path: str, retain_after_batch: int) -> dict:
 
     from hive_cassandra_spark import datasource
 
-    files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
+    files = sorted(_glob.glob(os.path.join(_glob.escape(path), "*.parquet")))
     if not files:
         raise ValueError(f"no parquet files under {path}")
     ids: dict[str, int] = {}
@@ -492,7 +499,7 @@ def vacuum_commit_log(spark, path: str, retain_after_batch: int) -> dict:
             "files_in": len(files), "files_out": len(files),
             "cells_in": 0, "cells_out": 0, "watermark": None,
         }
-    cells = spark.read.parquet(*prefix)
+    cells = spark.read.parquet(*map(_hadoop_path, prefix))
     cols = set(cells.columns)
     key = ["row_key", "column_name"] + (
         ["sub_column_name"] if "sub_column_name" in cols else []
@@ -511,7 +518,7 @@ def vacuum_commit_log(spark, path: str, retain_after_batch: int) -> dict:
     tok = _uuid.uuid4().hex
     renamed: list[str] = []
     for i, part in enumerate(
-        sorted(_glob.glob(os.path.join(tmp, "*.parquet")))
+        sorted(_glob.glob(os.path.join(_glob.escape(tmp), "*.parquet")))
     ):
         dst = os.path.join(
             path, f"part-{tok}-b{cutoff:09d}-{i:05d}.parquet"
@@ -547,21 +554,170 @@ def store_version(path: str) -> int:
     """Current committed version of an OCC-managed store: the highest
     PUBLISHED ``_occ-v%09d`` marker (0 = never committed). Markers are
     underscore-prefixed so every parquet reader ignores them."""
-    import glob as _glob
-    import os
+    return _OccLog(path).version
 
-    marks = _glob.glob(os.path.join(path, "_occ-v*"))
-    if not marks:
+
+_PART_RE = re.compile(r"part-occ-v(\d{9})-\d{5}-[0-9a-f]+\.parquet$")
+
+
+class _Marker(NamedTuple):
+    """One parsed ``_occ-v%09d`` marker. ``files`` maps table -> the part
+    count the commit recorded (``""`` = the flat store's ``files:<n>``)."""
+
+    snapshot: bool
+    tag: str | None
+    files: dict
+
+
+def _scan(directory: str) -> list:
+    """(name, is_dir) for every entry of ``directory`` ([] if missing).
+    A plain directory listing: no glob, so ``[`` / ``*`` / ``?`` in a store
+    path are just characters."""
+    try:
+        with os.scandir(directory) as it:
+            return [(e.name, e.is_dir()) for e in it]
+    except (FileNotFoundError, NotADirectoryError):
+        return []
+
+
+class _OccLog:
+    """One immutable read of an OCC store's commit log — the Delta
+    Snapshot shape. Every public OCC call builds exactly one and derives
+    all of its answers from it: the version, tags, snapshot floors,
+    visible parts and pinned-completeness checks.
+
+    Listing-order invariant: the markers are listed FIRST, and the part
+    files in a SEPARATE listing afterwards, never in the same one. A
+    writer renames its parts in before it publishes its marker, so every
+    version this snapshot sees as published had all of its parts on disk
+    before the part listing began. (One combined listing could see a
+    marker published mid-listing but miss parts renamed in behind the
+    listing's cursor.)
+
+    ``tables`` names the part directories to list after the markers
+    (``""`` = the flat store root); ``None`` lists the root and every
+    table subdirectory. Markers are parsed lazily, each opened at most
+    once."""
+
+    def __init__(self, path: str, tables=()):
+        self.path = path
+        entries = _scan(path)
+        self.versions = {
+            int(n[6:]) for n, _ in entries
+            if n.startswith("_occ-v") and n[6:].isdigit()
+        }
+        self.version = max(self.versions, default=0)
+        # hidden leftovers occ_recover sweeps: staging dirs, publish temps
+        self.leftovers = [
+            (n, d) for n, d in entries
+            if n.startswith((".occ-staging-", ".occ-publish-"))
+        ]
+        if tables is None:
+            tables = [""] + [
+                n for n, d in entries
+                if d and not n.startswith((".", "_occ-claim-"))
+            ]
+        self.parts = {}  # table -> {version: [part paths, name order]}
+        for t in tables:
+            for name, _ in sorted(_scan(os.path.join(path, t))):
+                m = _PART_RE.match(name)
+                if m:
+                    self.parts.setdefault(t, {}).setdefault(
+                        int(m.group(1)), []
+                    ).append(os.path.join(path, t, name))
+        self._markers: dict[int, _Marker] = {}
+
+    def marker(self, v: int) -> _Marker:
+        if v not in self._markers:
+            try:
+                with open(os.path.join(self.path, f"_occ-v{v:09d}")) as fh:
+                    lines = fh.read().splitlines()
+            except OSError:
+                lines = []
+            tag, files = None, {}
+            for ln in lines[1:]:
+                if ln.startswith("tag:"):
+                    tag = ln[4:]
+                elif ln.startswith("files:"):
+                    table, _, k = ln[6:].rpartition("=")
+                    files.setdefault(table, int(k))
+            self._markers[v] = _Marker(lines[1:2] == ["snapshot"], tag, files)
+        return self._markers[v]
+
+    def tags(self) -> dict:
+        return {
+            v: self.marker(v).tag
+            for v in sorted(self.versions)
+            if self.marker(v).tag is not None
+        }
+
+    def floor(self, cap: int | None = None) -> int:
+        """Highest published snapshot version (0 = none): versions below
+        it are superseded — invisible to ``occ_read``, droppable by
+        ``occ_vacuum``. ``cap`` bounds it to snapshots at or below a
+        pinned version (a compaction published AFTER the pin must not
+        supersede the pin's history)."""
+        for v in sorted(self.versions, reverse=True):
+            if (cap is None or v <= cap) and self.marker(v).snapshot:
+                return v
         return 0
-    return max(int(os.path.basename(m)[6:]) for m in marks)
+
+    def visible(self, as_of_version: int | None) -> set:
+        """Published versions visible to a read: all of them at or above
+        the snapshot floor for a latest read, only ``(floor-at-N, N]``
+        for an as-of read (Delta/Iceberg time-travel semantics). Raises
+        ValueError on a pin that was never published: pinning a run to a
+        version that doesn't exist is a caller bug, not an empty read."""
+        if as_of_version is None:
+            floor = self.floor()
+            return {v for v in self.versions if v >= floor}
+        if as_of_version not in self.versions:
+            raise ValueError(
+                f"as_of_version={as_of_version} was never published under "
+                f"{self.path} (published: {sorted(self.versions)}) — cannot "
+                "pin a read to a version that does not exist"
+            )
+        floor = self.floor(cap=as_of_version)
+        return {v for v in self.versions if floor <= v <= as_of_version}
+
+    def visible_parts(self, table: str, as_of_version: int | None):
+        """(visible versions, {version: part paths}) for ``table``.
+
+        A PINNED read fails closed when its visible range is only
+        partially on disk: every visible version's part count is checked
+        against the count its marker durably recorded, so a version that
+        lost some or all of its parts (``occ_vacuum``, out-of-band
+        deletion, a partial restore) is never served as "the state at
+        vN". Markers that predate the ``files:`` records are unknowable
+        and not flagged."""
+        visible = self.visible(as_of_version)
+        by_version = {
+            v: fs for v, fs in self.parts.get(table, {}).items() if v in visible
+        }
+        if as_of_version is None:
+            return visible, by_version
+        for v in sorted(visible):
+            recorded = self.marker(v).files.get(table)
+            actual = len(by_version.get(v, ()))
+            if recorded and actual < recorded:
+                raise FileNotFoundError(
+                    f"as_of_version={as_of_version}: version {v} committed "
+                    f"{recorded} part file(s)"
+                    + (f" for table '{table}'" if table else "")
+                    + f" under {self.path} but only {actual} remain on disk "
+                    "— the pinned history was vacuumed (occ_vacuum "
+                    "retention window passed) or externally damaged; "
+                    "refusing to serve partial state"
+                )
+        return visible, by_version
 
 
 class LocalFSClaimBackend:
     """Claim/publish atomics for the OCC commit protocol on a POSIX
     filesystem — the default backend, and the CONTRACT any object-store
-    backend must honor (r10 verdict item 6: ``os.mkdir`` atomicity is a
-    local stand-in; an S3/GCS deployment plugs in conditional-PUT here
-    without touching the protocol above it):
+    backend must honor (``os.mkdir`` atomicity is a local stand-in; an
+    S3/GCS deployment plugs in conditional-PUT here without touching the
+    protocol above it):
 
     - ``claim(path, version, token)`` must atomically acquire EXCLUSIVE
       ownership of ``version`` for this store, recording ``token`` so
@@ -574,16 +730,18 @@ class LocalFSClaimBackend:
       DynamoDB ``attribute_not_exists`` put works the same.
     - ``publish(path, version, content)`` makes the version marker
       visible atomically (readers either see the whole marker or no
-      marker). Only the claim winner may call it. The marker MUST land
-      at ``<path>/_occ-v%09d`` on the same filesystem abstraction that
-      serves ``path``'s data files — ``store_version`` / ``occ_read*``
-      / ``store_tags`` list markers there directly, so a backend that
-      publishes markers elsewhere (e.g. only into a lock table) would
-      leave readers blind to committed versions and recovery would
-      sweep LIVE commits. On S3 that filesystem IS the bucket (an
-      s3fs/fsspec mount or the committer's S3 client — a single-object
-      PUT is atomic, which is all publish needs); the claim atomics are
-      what S3 LACKS, and they are the part a backend replaces.
+      marker). Locally it writes a hidden ``.occ-publish-*`` temp and
+      renames it into place. Only the claim winner may call it. The
+      marker MUST land at ``<path>/_occ-v%09d`` on the same filesystem
+      abstraction that serves ``path``'s data files — every OCC reader
+      builds its log snapshot (``_OccLog``) by listing markers there, so
+      a backend that publishes markers elsewhere (e.g. only into a lock
+      table) would leave readers blind to committed versions and
+      recovery would sweep LIVE commits. On S3 that filesystem IS the
+      bucket (an s3fs/fsspec mount or the committer's S3 client — a
+      single-object PUT is atomic, which is all publish needs); the
+      claim atomics are what S3 LACKS, and they are the part a backend
+      replaces.
     - ``claim_token / pending_claims / claim_age_s / abandon`` serve
       ``occ_recover``: enumerate claims with no published marker, age
       them (a conditional-PUT backend uses the object's Last-Modified),
@@ -594,8 +752,6 @@ class LocalFSClaimBackend:
     only supplies the two atomics and claim bookkeeping."""
 
     def claim(self, path: str, version: int, token: str) -> bool:
-        import os
-
         claim = os.path.join(path, f"_occ-claim-{version:09d}")
         try:
             os.mkdir(claim)  # the atom: exactly one winner per version
@@ -606,14 +762,17 @@ class LocalFSClaimBackend:
         return True
 
     def publish(self, path: str, version: int, content: str) -> None:
-        import os
-
-        with open(os.path.join(path, f"_occ-v{version:09d}"), "w") as fh:
+        # write-then-rename: a reader listing the store mid-publish sees
+        # no marker or the whole one, never an empty file. The temp name
+        # is hidden from parquet readers and does not match _occ-v*.
+        tmp = os.path.join(
+            path, f".occ-publish-{version:09d}-{uuid.uuid4().hex[:8]}"
+        )
+        with open(tmp, "w") as fh:
             fh.write(content)
+        os.rename(tmp, os.path.join(path, f"_occ-v{version:09d}"))
 
     def claim_token(self, path: str, version: int) -> str:
-        import os
-
         tok_file = os.path.join(
             path, f"_occ-claim-{version:09d}", "token"
         )
@@ -623,28 +782,23 @@ class LocalFSClaimBackend:
 
     def pending_claims(self, path: str) -> list[int]:
         import glob as _glob
-        import os
 
         return sorted(
             int(os.path.basename(c)[11:])
-            for c in _glob.glob(os.path.join(path, "_occ-claim-*"))
+            for c in _glob.glob(
+                os.path.join(_glob.escape(path), "_occ-claim-*")
+            )
         )
 
     def claim_age_s(self, path: str, version: int) -> float:
-        import os
-        import time as _time
-
         try:
-            return _time.time() - os.path.getmtime(
+            return time.time() - os.path.getmtime(
                 os.path.join(path, f"_occ-claim-{version:09d}")
             )
         except OSError:
             return float("inf")  # claim vanished: nothing to protect
 
     def abandon(self, path: str, version: int) -> None:
-        import os
-        import shutil
-
         shutil.rmtree(
             os.path.join(path, f"_occ-claim-{version:09d}"),
             ignore_errors=True,
@@ -699,6 +853,10 @@ def occ_commit(
        marker file — ``store_version`` counts only published markers,
        so a torn commit is never observed as the current VERSION.
 
+    The cell store is the root table of ``occ_commit_tables`` (its
+    parts land in ``path`` itself, its marker records ``files:<n>``):
+    both run the one commit body.
+
     Torn-commit isolation applies to ``store_version`` and to readers
     that go through ``occ_read`` (which lists only part files whose
     version has a published marker). A raw ``spark.read.parquet(path)``
@@ -723,74 +881,12 @@ def occ_commit(
     failed against a claim that has NO published marker gets
     ``claim_pending=True`` in its result: the claimant is either still
     in flight or dead, and a refresh-and-retry loop alone will spin
-    forever on a dead claim — the caller should invoke ``occ_recover``
+    forever on a dead claim — the caller should wait it out
+    (``_occ_wait_out_claim``) or invoke ``occ_recover``
     (single-maintainer contract) before retrying. Returns
     {committed, version, conflict, claim_pending, files}.
     """
-    import glob as _glob
-    import os
-    import shutil
-    import uuid
-
-    os.makedirs(path, exist_ok=True)
-    cur = store_version(path)
-    if cur != expected_version:
-        return {
-            "committed": False, "version": cur, "conflict": True,
-            "claim_pending": False, "files": 0,
-        }
-    v = cur + 1
-    token = uuid.uuid4().hex[:8]
-    staging = os.path.join(path, f".occ-staging-{v:09d}-{token}")
-    cells.write.mode("overwrite").parquet(staging)
-    # the claim/publish atomics ride the pluggable backend (the
-    # deployment seam — LocalFSClaimBackend documents the contract)
-    if not OCC_CLAIM_BACKEND.claim(path, v, token):
-        shutil.rmtree(staging, ignore_errors=True)
-        # distinguish a live racing writer (its marker will appear and
-        # store_version will advance) from a DEAD claim (no marker ever):
-        # a caller that only refresh-and-retries would spin forever on
-        # the latter — claim_pending tells it to run occ_recover first
-        return {
-            "committed": False,
-            "version": store_version(path),
-            "conflict": True,
-            "claim_pending": not os.path.exists(
-                os.path.join(path, f"_occ-v{v:09d}")
-            ),
-            "files": 0,
-        }
-    n = 0
-    for f in sorted(_glob.glob(os.path.join(staging, "*.parquet"))):
-        # drop zero-row parts instead of committing them: Spark writes
-        # one empty part file even for an empty DataFrame, and a
-        # streaming pipeline committing many empty micro-batch deltas
-        # would accumulate junk files that every later read must list
-        # and open. The marker then records the truthful files:0, which
-        # is what lets a pinned as-of read distinguish "this version
-        # was legitimately empty" from "its parts were vacuumed".
-        if _parquet_num_rows(f) == 0:
-            os.remove(f)
-            continue
-        os.rename(
-            f,
-            os.path.join(
-                path, f"part-occ-v{v:09d}-{n:05d}-{token}.parquet"
-            ),
-        )
-        n += 1
-    shutil.rmtree(staging, ignore_errors=True)
-    # files:<n> lets an as-of read distinguish "this version committed
-    # parts that were later vacuumed" (fail closed) from "nothing to
-    # see" — markers are the only durable record once parts are gone
-    OCC_CLAIM_BACKEND.publish(
-        path, v,
-        token + ("\nsnapshot" if snapshot else "") + f"\nfiles:{n}",
-    )
-    return {
-        "committed": True, "version": v, "conflict": False,
-        "claim_pending": False, "files": n,
-    }
+    return occ_commit_tables(spark, path, {"": cells}, expected_version, snapshot)
 
 
 def occ_commit_tables(
@@ -804,14 +900,13 @@ def occ_commit_tables(
     """One ATOMIC versioned commit spanning several parquet tables — the
     multi-table face of ``occ_commit`` for artifacts whose consistency
     spans files (a retrieval index's postings + corpus meta, an IVF-PQ
-    index's centroids + codebooks + assignments + codes). The r09
-    advisor flagged ``update_postings_index``'s two-rename swap: delta
-    postings appended BEFORE the meta merge, so a crash left postings
-    with stale stats and a retry double-appended. Here every table's
-    parts stage first, ONE mkdir claims the version, parts rename in
-    under ``<path>/<table>/part-occ-v%09d-*-<token>.parquet``, and ONE
-    marker publishes them together — readers (``occ_read_table``) see
-    all of the commit or none of it.
+    index's centroids + codebooks + assignments + codes). A two-rename
+    swap that appends delta postings BEFORE the meta merge leaves
+    postings with stale stats after a crash, and a retry double-appends.
+    Here every table's parts stage first, ONE claim takes the version,
+    parts rename in under ``<path>/<table>/part-occ-v%09d-*-<token>.parquet``,
+    and ONE marker publishes them together — readers
+    (``occ_read_table``) see all of the commit or none of it.
 
     ``snapshot=True`` supersedes every prior version (the rebuild
     commit); an append commit layers on top (the delta commit). ``tag``
@@ -819,13 +914,8 @@ def occ_commit_tables(
     delta can detect it already published (``store_tags``) instead of
     double-applying. Same conflict/claim_pending contract as
     ``occ_commit``."""
-    import glob as _glob
-    import os
-    import shutil
-    import uuid
-
     os.makedirs(path, exist_ok=True)
-    cur = store_version(path)
+    cur = _OccLog(path).version
     if cur != expected_version:
         return {
             "committed": False, "version": cur, "conflict": True,
@@ -856,50 +946,56 @@ def occ_commit_tables(
     else:
         for item in tables.items():
             _stage(item)
+    # the claim/publish atomics ride the pluggable backend (the
+    # deployment seam — LocalFSClaimBackend documents the contract)
     if not OCC_CLAIM_BACKEND.claim(path, v, token):
         shutil.rmtree(staging, ignore_errors=True)
+        # distinguish a live racing writer (its marker will appear and
+        # the version will advance) from a DEAD claim (no marker ever):
+        # a caller that only refresh-and-retries would spin forever on
+        # the latter — claim_pending tells it to run occ_recover first
+        fresh = _OccLog(path)
         return {
-            "committed": False,
-            "version": store_version(path),
-            "conflict": True,
-            "claim_pending": not os.path.exists(
-                os.path.join(path, f"_occ-v{v:09d}")
-            ),
-            "files": 0,
+            "committed": False, "version": fresh.version, "conflict": True,
+            "claim_pending": v not in fresh.versions, "files": 0,
         }
-    n = 0
-    per_table: dict[str, int] = {}
-    for tname in tables:
-        os.makedirs(os.path.join(path, tname), exist_ok=True)
-        k = 0
-        for f in sorted(
-            _glob.glob(os.path.join(staging, tname, "*.parquet"))
-        ):
-            if _parquet_num_rows(f) == 0:  # see occ_commit: no junk parts
-                os.remove(f)
-                continue
-            os.rename(
-                f,
-                os.path.join(
-                    path, tname,
-                    f"part-occ-v{v:09d}-{k:05d}-{token}.parquet",
-                ),
-            )
-            k += 1
-            n += 1
-        per_table[tname] = k
-    shutil.rmtree(staging, ignore_errors=True)
     lines = [token]
     if snapshot:
         lines.append("snapshot")
     if tag:
         lines.append(f"tag:{tag}")
-    # files:<table>=<k> per table: an as-of read of table T fails closed
-    # when a visible version RECORDED parts for T that are now missing
-    # (vacuumed history), while a version that never carried T stays a
-    # legitimate no-op for that table
-    for tname, k in per_table.items():
-        lines.append(f"files:{tname}={k}")
+    n = 0
+    for tname in tables:
+        os.makedirs(os.path.join(path, tname), exist_ok=True)
+        k = 0
+        # listed, not globbed: a staging dir swept out from under a live
+        # commit raises here instead of publishing an empty version
+        for name in sorted(os.listdir(os.path.join(staging, tname))):
+            f = os.path.join(staging, tname, name)
+            if name.startswith(".") or not name.endswith(".parquet"):
+                continue
+            # drop zero-row parts instead of committing them: Spark
+            # writes one empty part file even for an empty DataFrame,
+            # and a streaming pipeline committing many empty deltas
+            # would accumulate junk files every later read must list
+            # and open
+            if _parquet_num_rows(f) == 0:
+                os.remove(f)
+                continue
+            os.rename(
+                f,
+                os.path.join(
+                    path, tname, f"part-occ-v{v:09d}-{k:05d}-{token}.parquet"
+                ),
+            )
+            k += 1
+        n += k
+        # files:<n> (root) / files:<table>=<k>: the durable part count an
+        # as-of read checks once parts may have been vacuumed — a version
+        # that RECORDED parts now missing fails closed, while files:0 (or
+        # a version that never carried the table) is a legitimate no-op
+        lines.append(f"files:{tname}={k}" if tname else f"files:{k}")
+    shutil.rmtree(staging, ignore_errors=True)
     OCC_CLAIM_BACKEND.publish(path, v, "\n".join(lines))
     return {
         "committed": True, "version": v, "conflict": False,
@@ -910,119 +1006,7 @@ def occ_commit_tables(
 def store_tags(path: str) -> dict:
     """{version: tag} for every published marker that carries one —
     lets a retried delta job detect its batch already landed."""
-    import glob as _glob
-    import os
-
-    out = {}
-    for m in _glob.glob(os.path.join(path, "_occ-v*")):
-        try:
-            with open(m) as fh:
-                lines = fh.read().splitlines()
-        except OSError:
-            continue
-        for ln in lines[1:]:
-            if ln.startswith("tag:"):
-                out[int(os.path.basename(m)[6:])] = ln[4:]
-    return out
-
-
-def _occ_visible_versions(path: str, as_of_version: int | None) -> set:
-    """Published versions visible to a read: all of them for a latest
-    read, only ``(floor-at-N, N]`` for an as-of read — where the floor
-    is the highest published SNAPSHOT at or below the pin, so a
-    compaction that lands AFTER the pinned version cannot rewrite
-    history out from under it (Delta/Iceberg time-travel semantics).
-    Raises ValueError on a pin that was never published: pinning a run
-    to a version that doesn't exist is a caller bug, not an empty
-    read."""
-    import glob as _glob
-    import os
-
-    published = {
-        int(os.path.basename(m)[6:])
-        for m in _glob.glob(os.path.join(path, "_occ-v*"))
-    }
-    if as_of_version is None:
-        return {v for v in published if v >= _occ_snapshot_floor(path)}
-    if as_of_version not in published:
-        raise ValueError(
-            f"as_of_version={as_of_version} was never published under "
-            f"{path} (published: {sorted(published)}) — cannot pin a "
-            "read to a version that does not exist"
-        )
-    floor = _occ_snapshot_floor(path, cap=as_of_version)
-    return {v for v in published if floor <= v <= as_of_version}
-
-
-def _occ_marker_files(path: str, version: int, table: str | None) -> int | None:
-    """Part-file count the version's marker RECORDED at commit time for
-    ``table`` (None = the flat cell-store count) — the durable evidence
-    an as-of read checks against once parts may have been vacuumed.
-    Returns None when the marker predates the files: lines (pre-round-12
-    stores) or never recorded this table."""
-    import os
-
-    try:
-        with open(os.path.join(path, f"_occ-v{version:09d}")) as fh:
-            lines = fh.read().splitlines()
-    except OSError:
-        return None
-    want = "files:" if table is None else f"files:{table}="
-    for ln in lines[1:]:
-        if ln.startswith("files:") and table is None and "=" not in ln:
-            return int(ln[6:])
-        if table is not None and ln.startswith(want):
-            return int(ln[len(want):])
-    return None
-
-
-def _occ_check_pinned_complete(
-    path: str,
-    visible: set,
-    counts: dict,
-    as_of_version: int | None,
-    table: str | None,
-) -> None:
-    """Fail closed when a PINNED read's visible range is only partially
-    on disk: a version whose marker recorded parts (for this table) that
-    are now gone was vacuumed — serving the surviving suffix as "the
-    state at vN" would be silently wrong history, the one thing a
-    reproducibility pin exists to prevent.
-
-    ``counts`` maps version -> number of part files actually on disk;
-    EVERY visible version is compared against the part count its marker
-    durably recorded (``files:``/``files:<table>=`` lines), not just the
-    fully-absent ones — a version that lost SOME part files to
-    out-of-band deletion or a partial copy/restore is the same wrong
-    history as one that lost all of them. Versions whose marker predates
-    the ``files:`` records (``None``) fall back to the old
-    presence-only semantics (unknowable, so not flagged)."""
-    if as_of_version is None:
-        return
-    for v in sorted(visible):
-        recorded = _occ_marker_files(path, v, table)
-        actual = counts.get(v, 0)
-        if recorded and actual < recorded:
-            raise FileNotFoundError(
-                f"as_of_version={as_of_version}: version {v} committed "
-                f"{recorded} part file(s)"
-                + (f" for table '{table}'" if table else "")
-                + f" under {path} but only {actual} remain on disk — "
-                "the pinned history was vacuumed (occ_vacuum retention "
-                "window passed) or externally damaged; refusing to "
-                "serve partial state"
-            )
-
-
-def _occ_pinned_all_empty(path: str, visible: set, table: str | None) -> bool:
-    """True when EVERY visible version's marker explicitly records 0
-    part files (an empty-DataFrame commit writes ``files:0``): the
-    pinned state is provably an empty store, not vacuumed history.
-    ``None`` (pre-``files:``-record marker) is unknowable and returns
-    False — fail closed."""
-    return all(
-        _occ_marker_files(path, v, table) == 0 for v in sorted(visible)
-    )
+    return _OccLog(path).tags()
 
 
 def occ_read_table(
@@ -1046,26 +1030,7 @@ def occ_read_table(
     empty index — for an as-of read that includes a pin whose parts
     ``occ_vacuum`` already dropped (history physically gone, same as
     time-travel past a Delta VACUUM)."""
-    import glob as _glob
-    import os
-    import re as _re
-
-    visible = _occ_visible_versions(path, as_of_version)
-    pat = _re.compile(r"part-occ-v(\d{9})-\d{5}-[0-9a-f]+\.parquet$")
-    by_version: dict = {}
-    for f in sorted(
-        _glob.glob(os.path.join(path, table, "part-occ-v*.parquet"))
-    ):
-        m = pat.search(os.path.basename(f))
-        if m and int(m.group(1)) in visible:
-            by_version.setdefault(int(m.group(1)), []).append(f)
-    _occ_check_pinned_complete(
-        path,
-        visible,
-        {v: len(fs) for v, fs in by_version.items()},
-        as_of_version,
-        table,
-    )
+    _, by_version = _OccLog(path, (table,)).visible_parts(table, as_of_version)
     if not by_version:
         raise FileNotFoundError(
             f"no committed parts for table '{table}' under {path}"
@@ -1078,10 +1043,15 @@ def occ_read_table(
             )
         )
     if latest_only:
-        files = by_version[max(by_version)]
-    else:
-        files = [f for fs in by_version.values() for f in fs]
-    return _read_parts(spark, files)
+        return _read_parts(spark, by_version[max(by_version)])
+    return _read_parts(spark, [f for v in sorted(by_version) for f in by_version[v]])
+
+
+def _hadoop_path(path: str) -> str:
+    """``path`` with Hadoop glob syntax escaped: Spark expands ``[ ] { }
+    * ?`` in read paths, so an unescaped store path ``cf[0]`` would be
+    read as ``cf0``."""
+    return re.sub(r"([\\\[\]{}*?])", r"\\\1", path)
 
 
 def _read_parts(spark, files: list):
@@ -1098,31 +1068,7 @@ def _read_parts(spark, files: list):
     reader = spark.read
     if spark_schema is not None:
         reader = reader.schema(StructType.fromJson(json.loads(spark_schema)))
-    return reader.parquet(*files)
-
-
-def _occ_snapshot_floor(path: str, cap: int | None = None) -> int:
-    """Highest published snapshot version (0 = none): versions below it
-    are superseded — invisible to ``occ_read``, droppable by
-    ``occ_vacuum``. ``cap`` bounds the scan to snapshots at or below a
-    pinned version (the as-of-read floor: a compaction published AFTER
-    the pin must not supersede the pin's history)."""
-    import glob as _glob
-    import os
-
-    floor = 0
-    for m in _glob.glob(os.path.join(path, "_occ-v*")):
-        v = int(os.path.basename(m)[6:])
-        if cap is not None and v > cap:
-            continue
-        try:
-            with open(m) as fh:
-                lines = fh.read().splitlines()
-        except OSError:
-            continue
-        if len(lines) > 1 and lines[1] == "snapshot":
-            floor = max(floor, v)
-    return floor
+    return reader.parquet(*map(_hadoop_path, files))
 
 
 def occ_read(
@@ -1136,10 +1082,11 @@ def occ_read(
     superseded and skipped even before ``occ_vacuum`` physically drops
     them. ``as_of_version=N`` pins the read to the state as of version
     N — versions in ``(floor-at-N, N]``, later deltas and later
-    snapshots invisible (time-travel; see ``occ_read_table``). Listing
-    is O(files) driver-side dirent work (the same cost class as any
-    parquet file listing), zero data movement; the returned DataFrame
-    scans exactly the committed, current parts.
+    snapshots invisible (time-travel; see ``occ_read_table``). The cost
+    is one log snapshot (``_OccLog``): two driver-side directory
+    listings, markers then parts, plus one open per marker it consults,
+    and zero data movement; the returned DataFrame scans exactly the
+    committed, current parts.
 
     An empty / never-committed store reads as an empty cell DataFrame
     whose schema comes from, in order: ``empty_schema`` (a StructType)
@@ -1149,59 +1096,40 @@ def occ_read(
     store whose cells carry ``sub_column_name`` / ``ttl_s`` would read
     back 4-column when empty and diverge from the non-empty case in
     downstream unions and compaction key derivation."""
-    import glob as _glob
-    import os
-    import re as _re
+    return _occ_read_log(spark, _OccLog(path, ("",)), empty_schema, as_of_version)
 
-    visible = _occ_visible_versions(path, as_of_version)
-    pat = _re.compile(r"part-occ-v(\d{9})-\d{5}-[0-9a-f]+\.parquet$")
-    files = []
-    counts: dict = {}
-    all_parts = sorted(_glob.glob(os.path.join(path, "part-occ-v*.parquet")))
-    for f in all_parts:
-        m = pat.search(os.path.basename(f))
-        if m and int(m.group(1)) in visible:
-            files.append(f)
-            v = int(m.group(1))
-            counts[v] = counts.get(v, 0) + 1
-    _occ_check_pinned_complete(path, visible, counts, as_of_version, None)
-    if not files:
-        if as_of_version is not None and not _occ_pinned_all_empty(
-            path, visible, None
-        ):
-            # a published pin with no visible parts — and at least one
-            # visible marker that recorded parts or predates the
-            # files: records — means occ_vacuum already dropped the
-            # pinned history: fail closed like occ_read_table, never
-            # silently serve an empty store as "the state at vN".
-            # When EVERY visible marker explicitly records files:0
-            # (empty-DataFrame commits), the pinned state genuinely IS
-            # an empty store, and it serves through the same
-            # empty-schema path the latest read uses.
-            raise FileNotFoundError(
-                f"no parts visible as of version {as_of_version} under "
-                f"{path} — the pinned history was vacuumed"
-            )
-        if empty_schema is not None:
-            return spark.createDataFrame([], empty_schema)
-        if all_parts:
-            # no visible version, but the store HAS a cell shape — take
-            # the schema from any part footer (metadata-only read)
-            return _read_parts(spark, all_parts[-1:]).limit(0)
-        from pyspark.sql import types as T
 
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("row_key", T.BinaryType()),
-                    T.StructField("column_name", T.BinaryType()),
-                    T.StructField("value", T.BinaryType()),
-                    T.StructField("ts", T.LongType()),
-                ]
-            ),
+def _occ_read_log(spark, log: _OccLog, empty_schema=None, as_of_version=None):
+    """``occ_read`` over an already-built log snapshot."""
+    visible, by_version = log.visible_parts("", as_of_version)
+    if by_version:
+        return _read_parts(
+            spark, [f for v in sorted(by_version) for f in by_version[v]]
         )
-    return _read_parts(spark, files)
+    if as_of_version is not None and not all(
+        log.marker(v).files.get("") == 0 for v in visible
+    ):
+        # a published pin with no visible parts — and at least one
+        # visible marker that recorded parts or predates the files:
+        # records — means occ_vacuum already dropped the pinned history:
+        # fail closed like occ_read_table, never silently serve an empty
+        # store as "the state at vN". When EVERY visible marker records
+        # files:0 (empty-DataFrame commits), the pinned state genuinely
+        # IS an empty store and serves through the empty-schema path.
+        raise FileNotFoundError(
+            f"no parts visible as of version {as_of_version} under "
+            f"{log.path} — the pinned history was vacuumed"
+        )
+    if empty_schema is not None:
+        return spark.createDataFrame([], empty_schema)
+    every = log.parts.get("", {})
+    if every:
+        # no visible version, but the store HAS a cell shape — take the
+        # schema from any part footer (metadata-only read)
+        return _read_parts(spark, every[max(every)][-1:]).limit(0)
+    from hive_cassandra_spark.datasource import _BASE_SCHEMA
+
+    return spark.createDataFrame([], _BASE_SCHEMA)
 
 
 def occ_recover(path: str, min_age_s: float = 0.0) -> dict:
@@ -1209,45 +1137,51 @@ def occ_recover(path: str, min_age_s: float = 0.0) -> dict:
     published marker is a torn commit — drop its token-matched part
     files and the claim itself so the version becomes claimable again
     (the in-flight writer is presumed dead; the ``recover_store``
-    single-maintainer contract). Leftover staging dirs sweep
-    unconditionally (they were never visible). Idempotent.
+    single-maintainer contract). Leftover staging dirs and marker
+    publish temps are swept too (they were never visible). Idempotent.
 
-    ``min_age_s`` age-gates the sweep: a claim younger than it is left
-    alone (counted in ``skipped_young``). "No marker at conflict time"
-    does NOT prove the claimant is dead — a live writer sits in exactly
-    that state between its mkdir claim and its marker publish, and
-    sweeping it would delete its claim and already-renamed parts, so its
-    eventually-published marker would name a version with silently
-    missing files. Automated maintenance (``occ_compact_store``) passes
-    a grace period; a human-invoked recovery after a known crash may
-    keep the 0 default. Returns {dropped_claims, dropped_parts,
-    dropped_staging, skipped_young}."""
-    import glob as _glob
-    import os
-    import shutil
-
-    dropped_claims = dropped_parts = dropped_staging = 0
-    skipped_young = 0
-    for stg in _glob.glob(os.path.join(path, ".occ-staging-*")):
-        shutil.rmtree(stg, ignore_errors=True)
-        dropped_staging += 1
-    for v in OCC_CLAIM_BACKEND.pending_claims(path):
-        if os.path.exists(os.path.join(path, f"_occ-v{v:09d}")):
+    ``min_age_s`` age-gates the sweep: a claim, staging dir or publish
+    temp younger than it is left alone (counted in ``skipped_young``).
+    "No marker at conflict time" does NOT prove the claimant is dead — a
+    live writer sits in exactly that state between its staging write and
+    its marker publish, and sweeping it would delete its staged parts,
+    or its claim and already-renamed parts, so its eventually-published
+    marker would name a version with silently missing files. Automated
+    maintenance (``occ_compact_store``) passes a grace period; a
+    human-invoked recovery after a known crash may keep the 0 default.
+    Returns {dropped_claims, dropped_parts, dropped_staging,
+    skipped_young}."""
+    # claims are listed BEFORE the log: a claimant that publishes in
+    # between is then seen as published, never swept as torn
+    pending = OCC_CLAIM_BACKEND.pending_claims(path)
+    log = _OccLog(path, None)
+    dropped_claims = dropped_parts = dropped_staging = skipped_young = 0
+    for name, is_dir in log.leftovers:
+        leftover = os.path.join(path, name)
+        try:
+            age = time.time() - os.path.getmtime(leftover)
+        except OSError:
+            continue  # swept by a racing recovery
+        if age < min_age_s:
+            skipped_young += 1
+        elif is_dir:
+            shutil.rmtree(leftover, ignore_errors=True)
+            dropped_staging += 1
+        else:
+            os.remove(leftover)
+            dropped_staging += 1
+    for v in pending:
+        if v in log.versions:
             continue  # published — the claim is the permanent winner record
         if OCC_CLAIM_BACKEND.claim_age_s(path, v) < min_age_s:
             skipped_young += 1
             continue  # possibly a live writer between claim and publish
         token = OCC_CLAIM_BACKEND.claim_token(path, v)
-        if token:
-            # root-level cell parts AND one-level table subdirs (the
-            # occ_commit_tables layout) carry the claimant's token
-            for pattern in (
-                os.path.join(path, f"part-occ-v{v:09d}-*-{token}.parquet"),
-                os.path.join(
-                    path, "*", f"part-occ-v{v:09d}-*-{token}.parquet"
-                ),
-            ):
-                for f in _glob.glob(pattern):
+        # root-level cell parts AND table subdirs (the occ_commit_tables
+        # layout) carry the claimant's token
+        for parts in log.parts.values():
+            for f in parts.get(v, ()):
+                if token and f.endswith(f"-{token}.parquet"):
                     os.remove(f)
                     dropped_parts += 1
         OCC_CLAIM_BACKEND.abandon(path, v)
@@ -1274,35 +1208,17 @@ def occ_vacuum(path: str, retain_versions: int = 0) -> dict:
     semantics). Retained versions stay invisible to latest reads (the
     marker floor governs those); a later vacuum with a smaller window
     drops them for good. Default 0 = reclaim everything below the
-    floor, the pre-round-12 behavior every maintenance pass uses.
+    floor, the behavior every maintenance pass uses.
     Returns {dropped_parts, floor, retained_versions}."""
-    import glob as _glob
-    import os
-    import re as _re
-
-    floor = _occ_snapshot_floor(path)
+    log = _OccLog(path, None)
+    floor = log.floor()
+    superseded = sorted(v for v in log.versions if v < floor)
+    retained = set(superseded[-retain_versions:]) if retain_versions > 0 else set()
     dropped = 0
-    retained: set[int] = set()
-    if floor:
-        pat = _re.compile(r"part-occ-v(\d{9})-\d{5}-[0-9a-f]+\.parquet$")
-        if retain_versions > 0:
-            superseded = sorted(
-                v
-                for v in {
-                    int(os.path.basename(m)[6:])
-                    for m in _glob.glob(os.path.join(path, "_occ-v*"))
-                }
-                if v < floor
-            )
-            retained = set(superseded[-retain_versions:])
-        for pattern in (
-            os.path.join(path, "part-occ-v*.parquet"),
-            os.path.join(path, "*", "part-occ-v*.parquet"),
-        ):
-            for f in _glob.glob(pattern):
-                m = pat.search(os.path.basename(f))
-                v = m and int(m.group(1))
-                if m and v < floor and v not in retained:
+    for parts in log.parts.values():
+        for v, files in parts.items():
+            if v < floor and v not in retained:
+                for f in files:
                     os.remove(f)
                     dropped += 1
     return {
@@ -1310,6 +1226,31 @@ def occ_vacuum(path: str, retain_versions: int = 0) -> dict:
         "floor": floor,
         "retained_versions": sorted(retained),
     }
+
+
+def _occ_wait_out_claim(path: str, res: dict, claim_grace_s: float) -> None:
+    """After a commit lost its claim to a claimant with no published
+    marker (``res["claim_pending"]``), wait that claim out before the
+    caller refreshes and retries. A pending claim is AMBIGUOUS: a live
+    writer sits in exactly that state between its claim and its marker
+    publish, indistinguishable from a dead claimant at conflict time. So
+    this polls until the claimant publishes or its claim vanishes (an
+    ordinary refresh-and-retry follows), and only once the claim is at
+    least ``claim_grace_s`` old sweeps claims older than that
+    (``occ_recover(min_age_s=claim_grace_s)``). Claim age comes from the
+    pluggable backend, never a local getmtime: under an object-store
+    backend there IS no local claim dir, and bypassing the seam would
+    break recovery."""
+    if not res["claim_pending"]:
+        return
+    while store_version(path) <= res["version"]:
+        age = OCC_CLAIM_BACKEND.claim_age_s(path, res["version"] + 1)
+        if age == float("inf"):
+            return  # claim gone (recovered elsewhere / published)
+        if age >= claim_grace_s:
+            occ_recover(path, min_age_s=claim_grace_s)
+            return
+        time.sleep(min(0.2, claim_grace_s - age))
 
 
 def occ_compact_store(
@@ -1321,38 +1262,28 @@ def occ_compact_store(
     max_retries: int = 5,
     claim_grace_s: float = 10.0,
 ) -> dict:
-    """``compact_store`` routed through the OCC commit protocol — the
-    r08-verdict item-3 consumer. The plain swap discipline has a
-    lost-update window: compaction reads the store, a concurrent ingest
-    appends, compaction's rename-swap clobbers the append. Here the
-    compacted winners are committed as a SNAPSHOT at the exact version
-    the inputs were read at: a concurrent append that claimed the next
+    """``compact_store`` routed through the OCC commit protocol. The
+    plain swap discipline has a lost-update window: compaction reads the
+    store, a concurrent ingest appends, compaction's rename-swap
+    clobbers the append. Here the compacted winners are committed as a
+    SNAPSHOT at the exact version the inputs were read at — both taken
+    from ONE log snapshot: a concurrent append that claimed the next
     version first forces a refresh-and-retry that re-reads WITH the new
     append included — no write is ever lost, with zero coordination
     between ingest and maintenance (the Delta/Iceberg optimistic-
     compaction shape).
 
-    A pending claim (claim without marker) is AMBIGUOUS: a live ingest
-    sits in exactly that state between its mkdir claim and its marker
-    publish, indistinguishable from a dead claimant at conflict time.
-    Sweeping it immediately would delete the live writer's claim and its
-    already-renamed parts — its eventually-published marker would then
-    name a version with silently missing files. So the sweep is
-    age-gated (r09 advisor finding): compaction WAITS, polling for the
-    marker, until the claim is at least ``claim_grace_s`` old, and only
-    then invokes ``occ_recover(min_age_s=claim_grace_s)``; a live writer
-    that publishes inside the grace window turns the wait into an
-    ordinary refresh-and-retry. Superseded parts are vacuumed after the
-    commit. Returns {cells_in, cells_out, version, conflicts, vacuumed,
-    files}.
+    A conflict against a pending claim (claim without marker) waits the
+    claim out through ``_occ_wait_out_claim`` with ``claim_grace_s``: a
+    live writer that publishes inside the grace window turns the wait
+    into an ordinary refresh-and-retry, and only a claim older than the
+    grace is swept. Superseded parts are vacuumed after the commit.
+    Returns {cells_in, cells_out, version, conflicts, vacuumed, files}.
     """
-    import os as _os
-    import time as _time
-
     conflicts = 0
     for _ in range(max_retries):
-        v_read = store_version(path)
-        cells = occ_read(spark, path)
+        log = _OccLog(path, ("",))
+        cells = _occ_read_log(spark, log)
         cols = set(cells.columns)
         key = ["row_key", "column_name"] + (
             ["sub_column_name"] if "sub_column_name" in cols else []
@@ -1367,7 +1298,7 @@ def occ_compact_store(
         # must not re-read store files that a racing vacuum could move
         flat = flat.localCheckpoint(eager=True)
         cells_out = flat.count()
-        res = occ_commit(spark, path, flat, v_read, snapshot=True)
+        res = occ_commit(spark, path, flat, log.version, snapshot=True)
         if res["committed"]:
             vac = occ_vacuum(path)
             return {
@@ -1379,23 +1310,7 @@ def occ_compact_store(
                 "files": res["files"],
             }
         conflicts += 1
-        if res["claim_pending"]:
-            # wait out the grace window (polling for the marker / version
-            # advance — a LIVE claimant publishing turns this into a
-            # normal refresh), then sweep only claims older than it.
-            # Claim age comes from the pluggable backend, never a local
-            # getmtime: under an object-store backend there IS no local
-            # claim dir, and bypassing the seam would break recovery.
-            while True:
-                if store_version(path) > res["version"]:
-                    break  # claimant published — ordinary conflict retry
-                age = OCC_CLAIM_BACKEND.claim_age_s(path, res["version"] + 1)
-                if age == float("inf"):
-                    break  # claim gone (recovered elsewhere / published)
-                if age >= claim_grace_s:
-                    occ_recover(path, min_age_s=claim_grace_s)
-                    break
-                _time.sleep(min(0.2, claim_grace_s - age))
+        _occ_wait_out_claim(path, res, claim_grace_s)
     raise RuntimeError(
         f"occ_compact_store: {max_retries} consecutive commit conflicts "
         f"on {path} — a live writer is outpacing compaction"

@@ -6,6 +6,8 @@ CassandraLazy* decode; SURVEY.md §5.2 and §7 step 4)."""
 
 import datetime
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from hive_cassandra_spark import sink, source
@@ -1228,3 +1230,359 @@ def test_occ_claim_race_across_processes(tmp_path):
     # won by someone (asserted above), so losing never wedged a
     # committer and never left partial state behind
     assert len(flat) == n_workers * n_versions
+
+
+def _occ_cells(spark, tag, n, ts=1000, parts=1):
+    """n cells keyed ``<tag><i>`` with value ``<tag>``, in ``parts`` files."""
+    from pyspark.sql import functions as F2
+
+    return spark.range(n).repartition(parts).select(
+        F2.encode(F2.concat(F2.lit(tag), F2.col("id").cast("string")),
+                  "utf-8").alias("row_key"),
+        F2.encode(F2.lit("c"), "utf-8").alias("column_name"),
+        F2.encode(F2.lit(tag), "utf-8").alias("value"),
+        F2.lit(ts).cast("long").alias("ts"),
+    )
+
+
+def _occ_rows(df):
+    return sorted((bytes(r.row_key), bytes(r.value)) for r in df.collect())
+
+
+def test_occ_latest_read_never_empty_when_compaction_races_the_listing(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction that publishes its snapshot marker while a latest
+    occ_read is listing the store must not make that read empty: the
+    read serves either the pre-compaction cells or the compacted ones.
+    The snapshot marker is published right after the store's first
+    directory listing returns (whichever listing primitive the read
+    uses)."""
+    import glob
+    import os
+
+    store = str(tmp_path / "race_store")
+    assert sink.occ_commit(spark, store, _occ_cells(spark, "a", 10), 0)["committed"]
+    assert sink.occ_commit(spark, store, _occ_cells(spark, "b", 4), 1)["committed"]
+    before = _occ_rows(sink.occ_read(spark, store))
+    snap = _occ_cells(spark, "s", 3, ts=2000)
+    after = _occ_rows(snap)
+
+    real_glob, real_listdir, real_scandir = glob.glob, os.listdir, os.scandir
+    fired = []
+
+    def in_store(p):
+        return isinstance(p, str) and os.path.normpath(p).startswith(store)
+
+    def race():
+        fired.append(True)  # before the commit: its own listings pass through
+        res = sink.occ_commit(spark, store, snap, 2, snapshot=True)
+        assert res["committed"], res
+
+    class Listed(list):
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            return False
+
+    def fake_scandir(p="."):
+        if fired or not in_store(p):
+            return real_scandir(p)
+        with real_scandir(p) as it:
+            entries = Listed(it)
+        race()
+        return entries
+
+    def fake_listdir(p="."):
+        if fired or not in_store(p):
+            return real_listdir(p)
+        names = real_listdir(p)
+        race()
+        return names
+
+    def fake_glob(pattern, *a, **kw):
+        if fired or not in_store(pattern):
+            return real_glob(pattern, *a, **kw)
+        names = real_glob(pattern, *a, **kw)
+        if not fired:
+            race()
+        return names
+
+    monkeypatch.setattr(os, "scandir", fake_scandir)
+    monkeypatch.setattr(os, "listdir", fake_listdir)
+    monkeypatch.setattr(glob, "glob", fake_glob)
+    try:
+        df = sink.occ_read(spark, store)
+    finally:
+        monkeypatch.undo()
+    assert fired, "the race never fired"
+    assert sink.store_version(store) == 3
+    got = _occ_rows(df)
+    assert got in (before, after), f"{len(got)} rows served"
+
+
+def test_occ_store_path_with_glob_metacharacters(spark, tmp_path):
+    """``[``, ``]``, ``*`` and ``?`` in a store path are plain
+    characters: the OCC commit/read/compact round trip and the plain
+    compact_store round trip work under ``cf[0]``."""
+    from pyspark.sql import functions as F2
+
+    store = str(tmp_path / "cf[0]")
+    assert sink.occ_commit(spark, store, _occ_cells(spark, "a", 5), 0)["committed"]
+    r2 = sink.occ_commit(spark, store, _occ_cells(spark, "b", 3), 1)
+    assert r2["committed"] and r2["version"] == 2, r2
+    assert sink.store_version(store) == 2
+    assert sink.occ_read(spark, store).count() == 8
+    assert sink.occ_read(spark, store, as_of_version=1).count() == 5
+    res = sink.occ_compact_store(spark, store)
+    assert res["version"] == 3 and res["cells_in"] == 8 and res["cells_out"] == 8
+    assert res["vacuumed"] == 2
+    assert sink.occ_read(spark, store).count() == 8
+    assert sink.occ_recover(store)["dropped_claims"] == 0
+
+    idx = str(tmp_path / "ix[*]?")
+    t = spark.range(3).select(F2.col("id").alias("k"))
+    assert sink.occ_commit_tables(spark, idx, {"t": t}, 0, tag="b0")["committed"]
+    assert sink.store_tags(idx) == {1: "b0"}
+    assert sink.occ_read_table(spark, idx, "t").count() == 3
+
+    plain = str(tmp_path / "cf[1]")
+    m = parse_mapping(":key,name,score,flag,ts", 5)
+    cells = sink.to_cells(_typed(spark), m, TYPES, clock_millis=1000)
+    n_cells = cells.count()
+    sink.write_cells(cells, plain)
+    stats = sink.compact_store(spark, plain)
+    assert stats["cells_in"] == n_cells and stats["files_in"] > 0
+    assert stats["cells_out"] == n_cells
+    back = spark.read.format("cassandra_cells").load(plain)
+    assert back.count() == n_cells
+    assert sink.recover_store(plain) == {
+        "rolled_forward": 0, "dropped_partials": 0, "dropped_old": 0,
+    }
+    # a connector overwrite replaces the store's parts, not adds to them
+    back.write.format("cassandra_cells").mode("overwrite").save(plain)
+    assert spark.read.format("cassandra_cells").load(plain).count() == n_cells
+
+
+def test_occ_marker_publish_never_writes_the_marker_name(
+    spark, tmp_path, monkeypatch
+):
+    """A reader may list the store at any moment of a commit, so the
+    marker must appear whole: no file named ``_occ-v*`` is ever opened
+    for writing; the marker is written under a hidden temp name and
+    renamed into place, with the same content as before."""
+    import builtins
+    import os
+
+    written = []
+    real_open = builtins.open
+
+    def spy_open(file, mode="r", *a, **kw):
+        if any(c in mode for c in "wax") and os.path.basename(
+            str(file)
+        ).startswith("_occ-v"):
+            written.append(str(file))
+        return real_open(file, mode, *a, **kw)
+
+    store = str(tmp_path / "pub_store")
+    idx = str(tmp_path / "pub_idx")
+    monkeypatch.setattr(builtins, "open", spy_open)
+    r1 = sink.occ_commit(spark, store, _occ_cells(spark, "a", 4), 0, snapshot=True)
+    r2 = sink.occ_commit_tables(
+        spark, idx, {"t": spark.range(2)}, 0, tag="b7"
+    )
+    monkeypatch.undo()
+    assert r1["committed"] and r2["committed"]
+    assert written == []
+    with open(os.path.join(store, "_occ-v000000001")) as fh:
+        assert fh.read().split("\n")[1:] == ["snapshot", f"files:{r1['files']}"]
+    with open(os.path.join(idx, "_occ-v000000001")) as fh:
+        assert fh.read().split("\n")[1:] == ["tag:b7", f"files:t={r2['files']}"]
+    for d in (store, idx):
+        assert not [n for n in os.listdir(d) if n.startswith(".occ-publish-")]
+
+
+def test_occ_recover_age_gate_spares_live_staging(spark, tmp_path):
+    """A live writer's staging dir (staged parts not yet renamed in) and
+    marker publish temp are as young as its claim: an age-gated
+    occ_recover leaves them alone, an ungated one sweeps them."""
+    import os
+
+    store = str(tmp_path / "stg_store")
+    assert sink.occ_commit(spark, store, _occ_cells(spark, "a", 3), 0)["committed"]
+    staging = os.path.join(store, ".occ-staging-000000002-abcd1234")
+    _occ_cells(spark, "b", 2).write.parquet(staging)
+    temp = os.path.join(store, ".occ-publish-000000002-abcd1234")
+    with open(temp, "w") as fh:
+        fh.write("abcd1234\nfiles:1")
+    rec = sink.occ_recover(store, min_age_s=10)
+    assert rec["dropped_staging"] == 0 and rec["skipped_young"] == 2, rec
+    assert os.path.isdir(staging) and os.path.exists(temp)
+    rec = sink.occ_recover(store)
+    assert rec["dropped_staging"] == 2, rec
+    assert not os.path.exists(staging) and not os.path.exists(temp)
+    assert sink.occ_read(spark, store).count() == 3
+
+
+def test_occ_each_call_reads_the_log_once(spark, tmp_path, monkeypatch):
+    """Every public OCC call builds exactly one log snapshot and opens
+    each marker at most once; only a commit that loses its claim builds
+    a second one, to report the fresh version."""
+    import collections
+    import os
+
+    store = str(tmp_path / "once_store")
+    idx = str(tmp_path / "once_idx")
+    for v, (tag, snap) in enumerate([("a", 0), ("b", 0), ("s", 1), ("c", 0)]):
+        assert sink.occ_commit(
+            spark, store, _occ_cells(spark, tag, 4), v, snapshot=bool(snap)
+        )["committed"]
+    meta = spark.createDataFrame([(1,)], "m long")
+    for v in range(2):
+        assert sink.occ_commit_tables(
+            spark, idx, {"rows": spark.range(3), "meta": meta}, v,
+            snapshot=v == 1, tag=f"t{v}",
+        )["committed"]
+
+    builds = []
+    opens = collections.Counter()
+
+    class CountingLog(sink._OccLog):
+        def __init__(self, *a, **kw):
+            builds.append(a)
+            super().__init__(*a, **kw)
+
+    def counting_open(file, *a, **kw):
+        if os.path.basename(str(file)).startswith("_occ-v"):
+            opens[str(file)] += 1
+        return open(file, *a, **kw)
+
+    monkeypatch.setattr(sink, "_OccLog", CountingLog)
+    monkeypatch.setattr(sink, "open", counting_open, raising=False)
+
+    def once(fn, *args, snapshots=1, **kw):
+        builds.clear()
+        opens.clear()
+        out = fn(*args, **kw)
+        assert len(builds) == snapshots, (fn.__name__, builds)
+        assert max(opens.values(), default=0) <= 1, (fn.__name__, opens)
+        return out
+
+    assert once(sink.store_version, store) == 4
+    assert once(sink.store_tags, idx) == {1: "t0", 2: "t1"}
+    assert once(sink.occ_read, spark, store).count() == 8
+    assert once(sink.occ_read, spark, store, as_of_version=2).count() == 8
+    assert once(sink.occ_read_table, spark, idx, "rows").count() == 3
+    assert once(sink.occ_read_table, spark, idx, "rows",
+                as_of_version=1).count() == 3
+    assert once(sink.occ_read_table, spark, idx, "meta",
+                latest_only=True).count() == 1
+    assert once(sink.occ_vacuum, store)["dropped_parts"] == 2
+    d = _occ_cells(spark, "d", 2)
+    assert once(sink.occ_commit, spark, store, d, 4)["committed"]
+    t2 = once(sink.occ_commit_tables, spark, idx, {"meta": meta}, 2, tag="t2")
+    assert t2["committed"]
+    stale = once(sink.occ_commit, spark, store, _occ_cells(spark, "x", 1), 1)
+    assert stale["conflict"] and stale["version"] == 5
+    os.mkdir(os.path.join(store, "_occ-claim-000000006"))
+    lost = once(sink.occ_commit, spark, store, _occ_cells(spark, "x", 1), 5,
+                snapshots=2)
+    assert lost["conflict"] and lost["claim_pending"] and lost["version"] == 5
+    assert once(sink.occ_recover, store)["dropped_claims"] == 1
+
+
+class _Crash(Exception):
+    pass
+
+
+_CRASH_MAX_STEP = 9
+
+
+@pytest.mark.parametrize("shape", ["flat", "tables"])
+@pytest.mark.parametrize("step", range(1, _CRASH_MAX_STEP + 1))
+def test_occ_commit_crash_at_every_step(spark, tmp_path, monkeypatch, shape, step):
+    """Crash the one commit body at its k-th filesystem/backend step —
+    the claim, each part rename or zero-row part removal, the staging
+    removal, the publish and the publish's own rename — for a flat
+    ``occ_commit`` and a three-table ``occ_commit_tables``. After every
+    crash the store is at the old or the new version and reads exactly
+    that version's cells, ``occ_recover`` is idempotent, and a retried
+    commit lands."""
+    import os
+    import shutil
+
+    store = str(tmp_path / "crash_store")
+
+    def commit(tag, expected):
+        if shape == "flat":
+            return sink.occ_commit(
+                spark, store, _occ_cells(spark, tag, 6, parts=2), expected
+            )
+        return sink.occ_commit_tables(
+            spark, store,
+            {
+                "rows": _occ_cells(spark, tag, 6, parts=2),
+                "meta": spark.createDataFrame([(tag,)], "m string").coalesce(1),
+                "empty": spark.createDataFrame([], "m string"),
+            },
+            expected, tag=tag,
+        )
+
+    def state():
+        if shape == "flat":
+            return _occ_rows(sink.occ_read(spark, store))
+        rows = _occ_rows(sink.occ_read_table(spark, store, "rows"))
+        meta = sink.occ_read_table(spark, store, "meta", latest_only=True)
+        return rows, [r.m for r in meta.collect()]
+
+    assert commit("a", 0)["committed"]
+    old = state()
+    added = _occ_rows(_occ_cells(spark, "b", 6))
+    new = (
+        sorted(old + added) if shape == "flat"
+        else (sorted(old[0] + added), ["b"])
+    )
+
+    calls = []
+
+    def faulty(name, real):
+        def op(*a, **kw):
+            calls.append(name)
+            if len(calls) == step:
+                raise _Crash(f"crash at step {step}: {name}")
+            return real(*a, **kw)
+
+        return op
+
+    backend = sink.LocalFSClaimBackend()
+    backend.claim = faulty("claim", backend.claim)
+    backend.publish = faulty("publish", backend.publish)
+    with monkeypatch.context() as mp:
+        mp.setattr(sink, "OCC_CLAIM_BACKEND", backend)
+        mp.setattr(os, "rename", faulty("rename", os.rename))
+        mp.setattr(os, "remove", faulty("remove", os.remove))
+        mp.setattr(shutil, "rmtree", faulty("rmtree", shutil.rmtree))
+        try:
+            res = commit("b", 1)
+            crashed = False
+        except _Crash:
+            crashed = True
+    assert calls[0] == "claim"
+    assert crashed == (step <= len(calls)), calls
+    if step == _CRASH_MAX_STEP:  # so the smaller steps covered every call
+        assert not crashed, f"more than {step - 1} steps: {calls}"
+
+    version = sink.store_version(store)
+    assert (version, state()) in ((1, old), (2, new))
+    assert crashed or (res["committed"] and version == 2)
+    sink.occ_recover(store)
+    assert sink.occ_recover(store) == {
+        "dropped_claims": 0, "dropped_parts": 0,
+        "dropped_staging": 0, "skipped_young": 0,
+    }
+    if version == 1:
+        assert state() == old
+        assert commit("b", 1)["committed"]
+    assert sink.store_version(store) == 2
+    assert state() == new
